@@ -183,15 +183,24 @@ def q_hamming_self_join(spark, sf_dir):
 
     Fingerprint = n_chars * K (SQL-computable on both engines) so the
     banding/verify machinery is checked end-to-end against a full
-    O(n^2) scan."""
-    from umi_collapse_rs_spark.operators.candidates import simhash_band_pairs
+    O(n^2) scan: simhash band keys only (no MinHash bands), the
+    production bucket expansion, and the union stage's Hamming gate."""
+    from umi_collapse_rs_spark.operators.candidates import band_keys, bucket_pairs
+    from umi_collapse_rs_spark.operators.edges import combined_candidates_with_dist
 
     d = _t(spark, sf_dir, "documents")
     fp = d.select(
-        F.col("doc_id"), (F.col("n_chars") * F.lit(_SPREAD_K)).alias("simhash"), F.lit(1).alias("freq")
+        F.col("doc_id"),
+        (F.col("n_chars") * F.lit(_SPREAD_K)).alias("simhash"),
+        F.array().cast("array<bigint>").alias("mh_bands"),
     )
-    return simhash_band_pairs(
-        fp, hamming_k=3, bands=4, cap=1_000_000, chain_width=4, id_col="doc_id"
+    keys = band_keys(fp, 4, id_col="doc_id").filter(F.col("source") == "simhash")
+    pairs = bucket_pairs(
+        keys, ["_bidx", "_bval"], "doc_id", "simhash", cap=1_000_000, chain_width=4,
+        keep_cols=["source"],
+    )
+    return combined_candidates_with_dist(
+        [pairs], fp, hamming_k=3, id_col="doc_id"
     ).select("src", "dst", "dist")
 
 
@@ -459,11 +468,11 @@ def q_simhash_fingerprints(spark, sf_dir):
 
 def q_minhash_lsh_pairs(spark, sf_dir):
     """SURVEY §2 J1: MinHash-LSH candidate pairs over documents —
-    sql-reproducible band values through the real bucket-join operator
-    (pairs_from_buckets), uncapped so the oracle is a plain band
-    equi-join."""
+    sql-reproducible band values through the real band-key builder and
+    bucket expansion (band_keys + bucket_pairs), uncapped so the oracle
+    is a plain band equi-join."""
     from umi_collapse_rs_spark.functions.sqlfp import with_sql_fingerprints
-    from umi_collapse_rs_spark.operators.candidates import minhash_lsh_pairs
+    from umi_collapse_rs_spark.operators.candidates import band_keys, bucket_pairs
 
     d = _t(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
@@ -477,8 +486,9 @@ def q_minhash_lsh_pairs(spark, sf_dir):
         # per side (measured 89 s vs ~3 s at sf0.1)
         .localCheckpoint(eager=False)
     )
+    keys = band_keys(fp, 4, id_col="doc_id").filter(F.col("source") == "minhash")
     return (
-        minhash_lsh_pairs(fp, cap=10_000, chain_width=4, id_col="doc_id")
+        bucket_pairs(keys, ["_bidx", "_bval"], "doc_id", "simhash", cap=10_000, chain_width=4)
         .select("src", "dst")
         .dropDuplicates(["src", "dst"])
     )

@@ -10,7 +10,8 @@ deterministic fixture corpus sized to the sf tier (FIXTURES.md §5:
 sf0.1 -> 150k pages, sized so fixed JVM/stage overhead is <15% of the
 run); `pages_per_sec` is the BASELINE.json throughput
 metric.  Scaling evidence (local[8] vs local[32], north_rule) is
-produced by tools/bench_scaling.py -> BENCH/BASELINE.md.
+produced by tools/bench_scaling.py (raw JSON, aggregated by
+tools/scaling_sessions.py into BENCH/BASELINE.md).
 """
 
 from __future__ import annotations
@@ -132,7 +133,7 @@ def main() -> int:
     # silently switched identity).
     qs = entry_mod.queries()
     from umi_collapse_rs_spark.functions.udfs import make_combined_fingerprint_udf
-    from umi_collapse_rs_spark.operators.candidates import minhash_lsh_pairs
+    from umi_collapse_rs_spark.operators.candidates import band_keys, bucket_pairs
 
     def _docs_numpy_fp():
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -159,9 +160,11 @@ def main() -> int:
     timed(
         "minhash_lsh_pairs[numpy]",
         # production candidate config (cap=8, chain 4), numpy bands
-        lambda: minhash_lsh_pairs(
-            _docs_numpy_fp().localCheckpoint(eager=False), cap=8, chain_width=4, id_col="doc_id"
-        ).dropDuplicates(["src", "dst"]),
+        lambda: bucket_pairs(
+            band_keys(_docs_numpy_fp().localCheckpoint(eager=False), 4, id_col="doc_id")
+            .filter(F.col("source") == "minhash"),
+            ["_bidx", "_bval"], "doc_id", "simhash", cap=8, chain_width=4,
+        ).select("src", "dst").dropDuplicates(["src", "dst"]),
     )
 
     # --- mode-independent operator queries over the sf-dir tables ---

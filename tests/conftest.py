@@ -7,7 +7,7 @@ import pytest
 def spark():
     from umi_collapse_rs_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

@@ -123,25 +123,3 @@ def test_deep_chain_converges(spark):
     want = oracle.greedy_directional(nodes, plist)
     assert got == want
 
-
-def test_round_batching_is_exact(spark):
-    """r4 verdict item #6: rounds_per_action composes two propagation
-    rounds into one driver action.  It must be a pure pacing change —
-    identical root assignments at batch sizes 1, 2, 3 on a deep chain
-    (worst case for batching: convergence is detected only at batch
-    boundaries) and on a star graph."""
-    freqs = [2**20 >> i for i in range(20)] + [1] * 20
-    nodes = {f"c{i:02d}": max(f, 1) for i, f in enumerate(freqs)}
-    plist = [(f"c{i:02d}", f"c{i+1:02d}", 1) for i in range(39)]
-    fp, pairs = _spark_dfs(spark, nodes, plist)
-    gated = directional_edges(pairs, fp)
-    outs = [
-        {
-            r["url"]: r["root_id"]
-            for r in propagate_min_label(
-                fp.select("url", "freq"), gated, rounds_per_action=rpa
-            ).collect()
-        }
-        for rpa in (1, 2, 3)
-    ]
-    assert outs[0] == outs[1] == outs[2] == oracle.greedy_directional(nodes, plist)

@@ -97,7 +97,7 @@ def test_minhash_similarity_tracks_jaccard():
 
 def test_bands_collision_for_identical():
     a = core.shingle_hashes("the quick brown fox jumps over dogs", 3)
-    v = core.batch_minhash_bands([a, a], perms=128, bands=32)
+    v = core.bands_from_signature(core.batch_minhash_signature([a, a], perms=128), bands=32)
     assert (v[0] == v[1]).all()
     assert v.shape == (2, 32)
 

@@ -69,18 +69,18 @@ def test_exact_collapse_is_single_aggregate_exchange(spark, pages_path):
 
 
 def test_pair_expansion_is_one_exchange_one_window(spark):
-    """pairs_from_buckets (capped regime) must stay a single exchange on
+    """bucket_pairs (capped regime) must stay a single exchange on
     the bucket key feeding a single WindowExec — the bucket-size count
     and every lead() share one window spec, so one sort serves all of
     them, and no collect_list / python node appears anywhere."""
     import re
 
-    from umi_collapse_rs_spark.operators.candidates import pairs_from_buckets
+    from umi_collapse_rs_spark.operators.candidates import bucket_pairs
 
     df = spark.createDataFrame(
         [(i % 7, f"id{i:03d}", i) for i in range(100)], "b int, id string, o long"
     )
-    plan = _plan(pairs_from_buckets(df, ["b"], "id", "o", cap=8, chain_width=4))
+    plan = _plan(bucket_pairs(df, ["b"], "id", "o", cap=8, chain_width=4))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert len(re.findall(r"\(\d+\) Window", plan)) == 1
     assert "collect_list" not in plan

@@ -351,3 +351,19 @@ def test_mid_stream_compaction_preserves_high_water_mark(spark, stream_run, tmp_
     sink(drops[order[1]], 1)              # replay after compaction: no-op
     assert store.manifest() == m
     _assert_states_equal(store.read(), stream_run["store"].read())
+
+
+def test_batch_fingerprint_sees_repeated_rows(spark):
+    """A row repeated an even number of times must still count: under
+    an XOR fold {A, A, B} and {C, C, B} collide, so a changed batch
+    would pass as a re-delivery of the committed one."""
+    from umi_collapse_rs_spark.streaming.incremental import batch_fingerprint
+
+    def fp(rows):
+        return batch_fingerprint(spark.createDataFrame(rows, "url string, text string"))
+
+    a, b, c = ("u1", "alpha"), ("u2", "beta"), ("u3", "gamma")
+    assert fp([a, a, b]) != fp([c, c, b])
+    # order-independent, and the leading field is the row count
+    assert fp([a, b, c]) == fp([c, a, b])
+    assert fp([a, a, b]).split(":")[0] == "3"

@@ -29,7 +29,14 @@ noise-dominated: three runs spanned 0.72-1.09):
 
 Usage:
 
-    python tools/bench_scaling.py [n_pages] [--cores 1,4] [--repeats 3]
+    python tools/bench_scaling.py [n_pages] [--cores 1,4] [--repeats 3] \
+        > BENCH/scaling_<session>_raw.json
+    python tools/scaling_sessions.py
+
+The tool prints one raw JSON report (last stdout line) and writes no
+other file; ``tools/scaling_sessions.py`` aggregates every committed
+raw session into the table that BENCH/BASELINE.md's hand-curated
+session history carries.
 """
 
 from __future__ import annotations
@@ -146,9 +153,6 @@ def main() -> int:
     ap.add_argument("--cores", default="1,4", help="comma-separated pinned-CPU counts")
     ap.add_argument("--repeats", type=int, default=3, help="alternating repeats per level")
     ap.add_argument(
-        "--no-report", action="store_true", help="print JSON only, leave BENCH/BASELINE.md alone"
-    )
-    ap.add_argument(
         "--idle-below", type=float, default=0.3,
         help="start each run only once 1-min loadavg decays below this",
     )
@@ -259,162 +263,6 @@ def main() -> int:
         if a in tp and b in tp:
             report[f"efficiency_{a}_to_{b}"] = eff(a, b)
     print(json.dumps(report))
-    if opts.no_report or not (1 in tp and 4 in tp):
-        return 0
-
-    clusters = {r["clusters"] for rs in runs.values() for r in rs}
-    same = len(clusters) == 1
-    per_rep = ""
-    if set(cores_list) >= {1, 4} and len(runs[1]) == len(runs[4]):
-        pairs = [
-            round(runs[4][i]["pages_per_sec"] / runs[1][i]["pages_per_sec"] / 4, 3)
-            for i in range(len(runs[1]))
-        ]
-        per_rep = (
-            "- per-repeat pairings (same-rep 4-core over 1-core): "
-            + ", ".join(f"rep{i} {p}" for i, p in enumerate(pairs))
-            + "\n"
-        )
-    rows = "\n".join(
-        "| local[{c}] | {walls} | {tps} | {med} |".format(
-            c=c,
-            walls=" / ".join(str(r["wall_sec"]) for r in runs[c]),
-            tps=" / ".join(str(r["pages_per_sec"]) for r in runs[c]),
-            med=tp[c],
-        )
-        for c in cores_list
-    )
-    spread = {
-        c: round((tp_all[c][-1] - tp_all[c][0]) / tp[c] * 100, 1) for c in cores_list
-    }
-    stage_rows = "\n".join(
-        "| {s} | {w1:,.0f} | {w4:,.0f} | {e} |".format(
-            s=s,
-            w1=v[f"wall_ms_{cores_list[0]}c"],
-            w4=v[f"wall_ms_{cores_list[-1]}c"],
-            e=v["efficiency"],
-        )
-        for s, v in stage_eff.items()
-    )
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-            f"""# BENCH — scaling + throughput evidence
-
-North-rule scaling criterion (BASELINE.json): throughput scaling
-efficiency >= 0.8 from N to 4N executors.  Sandbox stand-in per the
-driver instruction: the SAME dedup job on the SAME input
-({n_pages:,} synthetic fixture pages, seed 42) at two pinned-CPU
-parallelism levels.  Each run is a fresh `spark-submit --py-files` JVM
-pinned with `taskset -c 0-(n-1)` to EXACTLY n CPUs (GC threads
-included) — without pinning, the small-N JVM borrows idle host cores
-for GC/IO/Python workers and the baseline is not an honest n-core
-measurement.  `spark.sql.shuffle.partitions = 3 x cores` at every
-level (same formula per level; the standard 2-4x sizing).
-
-Measurement protocol (r2 verdict item #1 — the single-run numbers were
-noise-dominated): {total_reps} repeats per level in ALTERNATING order
-(1, 4, 1, 4, ...), each run gated on 1-min loadavg < {opts.idle_below}
-(r4: the earlier <1.0 gate admitted the previous run's load mid-decay
-— see the r4 root-cause section below), efficiency computed from the
-MEDIAN pages/sec per level, per-run numbers published:
-
-| parallelism (pinned CPUs) | wall s (runs) | pages/sec (runs) | median pages/sec |
-|---|---|---|---|
-{rows}
-
-- **N -> 4N (1 -> 4 cores): {round(tp[4] / tp[1], 2)}x median speedup,
-  scaling efficiency {eff(1, 4)}** (criterion >= 0.8)
-{per_rep}- run-to-run spread (max-min over median): local[1] {spread.get(1)}%, local[4] {spread.get(4)}%
-- cluster outputs identical across every run and parallelism level: {same}
-
-## Per-stage 1 -> 4 efficiency (median stage wall per level)
-
-r4 verdict item #6: the iterative clustering stage (s6) was the one
-sub-0.8 component — driver-paced rounds pay fixed scheduling latency
-no core count parallelizes.  r5 implemented round-batching
-(operators/cluster.py rounds_per_action: TWO propagation rounds
-composed into one checkpoint+stats action), measured it with a
-stage-isolated 2x2 A/B (checkpoint-resume on this same 1.2M input so
-ONLY s6+s7 recompute), and REJECTED it: the mid-batch frontier is a
-lazy filter over sub-round 1's plan, so sub-round 2 re-derives that
-whole join/agg subtree inside the same action — s6 wall 183.9 -> 273.3
-s at 1 core (+49%) and 67.8 -> 87.6 s at 4 cores (+29%), outputs
-bit-identical (270,177 clusters, equal content hash) in all four arms.
-The shipped default is rounds_per_action=1; the knob remains for
-topologies where driver latency dominates compute.  The honest
-residual: s6's driver-paced rounds keep it the weakest-scaling stage,
-and the fix at real-cluster scale is fewer rounds (the graphs are
-star-like, typically 4-6 rounds) — not deeper lazy plans.
-
-| stage | median wall ms @1c | @4c | efficiency |
-|---|---|---|---|
-{stage_rows}
-
-## Root cause of the r2 "0.72" measurement
-
-The r2 harness set `shuffle.partitions = cores`, so at local[4] every
-stage ran as 4 tasks and waited on the slowest partition — a pure
-granularity artifact that charged text-length skew to the scaling
-number (measured on one 600k-page input: 215.3 s at sp=4 vs 163.2 s at
-sp=12, +32% from granularity alone; local[1] is immune since 1
-partition cannot skew).  With the per-level formula fixed to 3 x cores
-the pairing measures the JOB, and the job scales — per-stage numbers
-in the table above.
-
-## Root cause of the r4 sub-0.8 per-rep pairings (and the gate fix)
-
-The first r4 median-of-5 (BENCH/scaling_r04_raw.json: medians
-1130.6 / 3736.5, efficiency 0.826, pairings 0.935 / 0.856 / 0.726 /
-0.759 / 0.932) exposed the residual noise source: 4-core throughput
-was PERFECTLY rank-anticorrelated with its start loadavg (Spearman
--1.0 over all 5 reps, 0.80 -> 4228.1 monotone down to 0.98 -> 3400.9,
-a 20% swing) while 1-core showed none (-0.1), and the sub-0.8
-pairings were exactly the two fastest 1-core runs divided by the two
-highest-load 4-core runs.  Every 0.8-0.99 start load was the
-PREVIOUS run's load mid-decay — true idle on this VM is ~0.05 — i.e.
-the <1.0 gate fired at the first 15 s sample under 1.0 instead of
-letting the decay finish.  The harness now waits for loadavg < 0.3
-(`--idle-below`), which costs ~2 min between runs and removes the
-dominant pairing noise; the numbers above are measured under the
-fixed gate.
-
-## Reading the curve against THIS host's hardware ceiling
-
-This sandbox is one VM (32 cores, one memory bus).  Framework-free
-microbenchmarks (ProcessPoolExecutor + numpy, same pinning) show
-DRAM-streaming workloads saturate at ~6 concurrent streams (2 -> 8
-worker efficiency 0.48) — so only the 1 -> 4 pairing measures
-executor-style scaling without charging the shared-bus ceiling to the
-job.  On a real cluster N -> 4N *executors* multiplies memory
-bandwidth and heap along with cores, which is what the unsaturated
-pairing emulates.  The job itself has no serial choke points: no
-driver-side data loops, no collect, a fixed number of exchanges per
-stage, and identical deterministic output at every parallelism level.
-
-Reproduce: `python tools/bench_scaling.py {n_pages} --repeats {total_reps}`
-
-Correctness evidence (dup-pair recall >= 0.99 + zero assignment
-mismatches vs the reference-semantics oracle at 150k pages): see
-BENCH/RECALL.md.
-
-Headline throughput (sf0.1 bench tier, 150k fixture pages, local[32],
-steady-state after warmup): see the
-driver-recorded BENCH_r*.json from `bench.py` (`pages_per_sec`).
-
-Scale analysis (100 TB / 10^12 docs): every stage is a fixed, bounded
-number of shuffles — normalize+exact collapse (1 exchange on text_sha),
-fingerprint UDF (map-only after 1 re-spread exchange), candidate
-generation (1 exchange per source on bucket keys, skew-capped by
-sorted-neighbor chaining with all-pairs expansion capped at
-bucket_pair_cap), verify (pair-keyed joins, the fat MinHash-signature
-payload joined only for LSH-only pairs), clustering (O(log depth)
-rounds, each 2 exchanges, lineage cut per round, one short-circuit
-convergence probe), output joins.  No driver-side loops over data; no
-collect; per-bucket work is bounded by the pair cap, so hot template
-farms cannot blow up a task.
-"""
-        )
     return 0
 
 

@@ -12,7 +12,7 @@ and the DuckDB/pure-Python oracles — reproduce bit-identical fingerprints.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -20,7 +20,6 @@ class DedupConfig:
     # --- fingerprint config (the "identical shingle/signature config"
     #     that BASELINE.json's recall metric is measured at) ---
     shingle_k: int = 3          # word-level k-shingles
-    simhash_bits: int = 64      # one LongType column
     hamming_k: int = 3          # ref: cli.rs:18-19 edit budget k (default 1; we use 3 for 64-bit simhash)
     simhash_bands: int = 4      # k+1 pieces => any pair with dist<=k shares >=1 piece
     minhash_perms: int = 128    # signature length
@@ -65,12 +64,6 @@ class DedupConfig:
     shuffle_partitions: int = 32
     checkpoint_dir: str | None = None   # stage-checkpoint root (resumability)
 
-    extra_spark_conf: dict = field(default_factory=dict)
-
-    @property
-    def lsh_rows_per_band(self) -> int:
-        return self.minhash_perms // self.lsh_bands
-
     def output_config_token(self) -> str:
         """Short stable hash of every output-affecting field.
 
@@ -78,12 +71,12 @@ class DedupConfig:
         merge rule / fingerprint mode / banding config can never resume
         stage outputs computed under the old config (it resolves to a
         different path and recomputes).  Pure execution knobs
-        (shuffle_partitions, checkpoint_dir, extra_spark_conf) are
-        excluded — they change the physical plan, not the result.
+        (shuffle_partitions, checkpoint_dir) are excluded — they change
+        the physical plan, not the result.
         """
         import hashlib
 
-        skip = {"shuffle_partitions", "checkpoint_dir", "extra_spark_conf"}
+        skip = {"shuffle_partitions", "checkpoint_dir"}
         parts = [
             f"{name}={getattr(self, name)!r}"
             for name in sorted(self.__dataclass_fields__)
@@ -94,8 +87,8 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.minhash_perms % self.lsh_bands:
             raise ValueError("minhash_perms must be divisible by lsh_bands")
-        if self.simhash_bits % self.simhash_bands:
-            raise ValueError("simhash_bits must be divisible by simhash_bands")
+        if 64 % self.simhash_bands:
+            raise ValueError("64 (simhash bits) must be divisible by simhash_bands")
         if self.algo not in ("dir", "adj", "cc"):
             raise ValueError(f"unknown algo {self.algo!r}")
         if not 1 <= self.chain_width <= 32:

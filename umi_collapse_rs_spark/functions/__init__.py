@@ -1,2 +1,1 @@
 from umi_collapse_rs_spark.functions.normalize import normalize_text_col, text_sha_col  # noqa: F401
-from umi_collapse_rs_spark.functions.udfs import minhash_bands_udf, simhash64_udf  # noqa: F401

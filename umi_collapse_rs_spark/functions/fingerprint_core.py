@@ -351,13 +351,6 @@ def bands_from_signature(sig: np.ndarray, bands: int) -> np.ndarray:
     return band_vals.view(np.int64)
 
 
-def batch_minhash_bands(
-    hash_arrays: list[np.ndarray], perms: int, bands: int, seed: int = 42
-) -> np.ndarray:
-    """Banded MinHash bucket keys, shape (n_docs, bands), int64."""
-    return bands_from_signature(batch_minhash_signature(hash_arrays, perms, seed), bands)
-
-
 def hamming64(a: int, b: int) -> int:
     """Popcount Hamming distance between two signed-int64 simhashes."""
     return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")

@@ -32,10 +32,3 @@ def text_sha_col(text_norm: Column | str) -> Column:
     c = F.col(text_norm) if isinstance(text_norm, str) else text_norm
     return F.sha2(c, 256)
 
-
-def token_count_col(text_norm: Column | str) -> Column:
-    """Whitespace token count of normalized text (codegen'd)."""
-    c = F.col(text_norm) if isinstance(text_norm, str) else text_norm
-    return F.when(F.length(c) == 0, F.lit(0)).otherwise(
-        F.size(F.split(c, r"\s+"))
-    )

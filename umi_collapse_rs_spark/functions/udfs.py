@@ -1,21 +1,23 @@
-"""The engine's ONLY two pandas UDFs (Arrow-vectorized), per the
-input_hint "no per-row Python":
+"""The text-fingerprint pandas UDF (Arrow-vectorized), per the
+input_hint "no per-row Python": one pass per Arrow batch computes, from
+one shingle-hash set per document,
 
-1. ``simhash64_udf``      — text -> 64-bit SimHash (LongType)
-2. ``minhash_bands_udf``  — text -> banded MinHash bucket keys
-                            (ArrayType(LongType), one value per band)
+- ``simhash``  — 64-bit SimHash (LongType), the Hamming-ball key;
+- ``mh_bands`` — banded MinHash bucket keys (one value per band);
+- ``mh_sig``   — the full MinHash signature, read only by the
+                 signature-similarity verifier on *candidate pairs*;
+- ``win_hashes`` (optional) — content-defined window fingerprints.
 
-plus ``minhash_signature_udf`` (full signature, used only by the
-signature-similarity verifier on *candidate pairs*, a tiny fraction of
-rows).  Everything else in the pipeline is Catalyst column expressions.
+Everything else in the pipeline is Catalyst column expressions.
 
 Reference analog: ``to_bitset`` string->fingerprint encoding
 (``/root/reference/src/utils/mod.rs:63-83``) — a pure function of the
 text, as required by the per-row invariant in BASELINE.json input_hint.
 
-Scale note: each UDF call processes one Arrow batch (10k rows); the
-per-batch work is C-vectorized (see fingerprint_core), so throughput is
-bounded by Arrow transfer + numpy, not the Python interpreter.  At 100 TB
+Scale note: each UDF call processes one Arrow batch (500 rows, see
+session.py); the per-batch work is C-vectorized (see fingerprint_core),
+so throughput is bounded by Arrow transfer + numpy, not the Python
+interpreter.  At 100 TB
 these run embarrassingly parallel across executors with no shuffle.
 """
 
@@ -97,35 +99,3 @@ def make_combined_fingerprint_udf(
 
     return fingerprint
 
-
-def make_fingerprint_udfs(shingle_k: int, perms: int, bands: int, seed: int):
-    """Build the fingerprint UDFs for a fixed shingle/signature config.
-
-    Returned as (simhash_udf, bands_udf, signature_udf); each takes the
-    *normalized* text column.
-    """
-
-    @F.pandas_udf(T.LongType())
-    def simhash64(text: pd.Series) -> pd.Series:
-        hashes = core.batch_shingle_hashes(text.fillna("").tolist(), shingle_k, seed)
-        return pd.Series(core.batch_simhash(hashes))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_bands(text: pd.Series) -> pd.Series:
-        hashes = core.batch_shingle_hashes(text.fillna("").tolist(), shingle_k, seed)
-        vals = core.batch_minhash_bands(hashes, perms, bands, seed)
-        return pd.Series(list(vals))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_signature(text: pd.Series) -> pd.Series:
-        hashes = core.batch_shingle_hashes(text.fillna("").tolist(), shingle_k, seed)
-        sig = core.batch_minhash_signature(hashes, perms, seed)
-        return pd.Series(list(sig))
-
-    return simhash64, minhash_bands, minhash_signature
-
-
-# Default-config instances for ad-hoc use (DedupConfig defaults).
-simhash64_udf, minhash_bands_udf, minhash_signature_udf = make_fingerprint_udfs(
-    shingle_k=3, perms=128, bands=32, seed=42
-)

@@ -1,11 +1,10 @@
 from umi_collapse_rs_spark.operators.exact import exact_collapse  # noqa: F401
 from umi_collapse_rs_spark.operators.candidates import (  # noqa: F401
-    minhash_lsh_pairs,
-    pairs_from_buckets,
-    simhash_band_pairs,
+    band_keys,
+    bucket_pairs,
     window_overlap_pairs,
 )
-from umi_collapse_rs_spark.operators.edges import directional_edges, union_pairs  # noqa: F401
+from umi_collapse_rs_spark.operators.edges import directional_edges  # noqa: F401
 from umi_collapse_rs_spark.operators.cluster import (  # noqa: F401
     adjacency_assign,
     connected_components,

@@ -10,15 +10,21 @@ formulation (banding IS the n-gram index generalization):
 
 - SimHash path: split the 64-bit fingerprint into ``k+1`` pieces; any
   pair within Hamming distance k agrees exactly on >=1 piece
-  (pigeonhole).  Join on (piece_idx, piece_val), verify
-  ``bit_count(a XOR b) <= k`` — all JVM-side.
-- MinHash-LSH path: join on (band_idx, band_val), verify by MinHash
-  signature similarity (done in edges.py where signatures are joined).
+  (pigeonhole).  Bucket on (piece_idx, piece_val); the Hamming check
+  ``bit_count(a XOR b) <= k`` happens at the union stage
+  (edges.combined_candidates_with_dist) — all JVM-side.
+- MinHash-LSH path: bucket on (band_idx, band_val), verify by MinHash
+  signature similarity (edges.verify_pairs, where signatures are joined).
 - Window path (stage 8): content-defined 64-token window fingerprints
   catch long verbatim overlaps that whole-document LSH misses.
 
+Both banded families come from ONE key builder (:func:`band_keys`:
+simhash pieces at idx ``0..b-1``, MinHash bands at idx ``64+j``) and
+every bucketed family — self-join, incremental cross-join, window pass,
+driver queries — expands through ONE function, :func:`bucket_pairs`.
+
 Skew (north_rule calls it out explicitly): template farms create
-mega-buckets whose all-pairs expansion is O(n^2).  ``pairs_from_buckets``
+mega-buckets whose all-pairs expansion is O(n^2).  ``bucket_pairs``
 caps it — buckets up to ``cap`` members do the full self-join; larger
 buckets switch to sorted-neighbor chaining (members sorted by fingerprint
 inside the bucket, each linked to the next ``chain_width``), which keeps
@@ -56,8 +62,8 @@ def _lead_expanded_pairs(
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """The single-Exchange / single-WindowExec lead() pair expansion —
-    THE shared core of every bucket-pair generator (plan invariant
-    pinned in tests/test_plans.py).
+    the core of :func:`bucket_pairs` (plan invariant pinned in
+    tests/test_plans.py).
 
     Returns (src, dst, _hot) with src < dst; ``_hot`` marks pairs that
     came from a bucket larger than ``cap`` (sorted-neighbor chain pairs,
@@ -97,7 +103,7 @@ def _lead_expanded_pairs(
     )
 
 
-def _bucket_pairs_with_hot(
+def bucket_pairs(
     bucketed: DataFrame,
     bucket_cols: list[str],
     id_col: str,
@@ -106,17 +112,26 @@ def _bucket_pairs_with_hot(
     chain_width: int,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """(src, dst, _hot[, *keep_cols]) pairs under both cap regimes.
+    """Candidate (src, dst, _hot[, *keep_cols]) pairs within buckets,
+    skew-capped.
+
+    ``bucketed`` must have ``bucket_cols + [id_col, order_col]``.
+    Returns src < dst; a pair may appear once per shared bucket —
+    callers that union several pair sources dedup ONCE at the union
+    (one shuffle instead of one per source), callers that need distinct
+    pairs call ``.dropDuplicates``.  ``_hot`` marks pairs chained
+    inside a bucket larger than ``cap``.
 
     cap small enough for lead() plan width -> the single-pass window
-    expansion.  Essentially-uncapped caps (oracle / brute-force parity
-    runs) -> a bucket equi-self-join for small buckets (quadratic per
-    bucket — exactly what the caller asked for), with buckets beyond
-    even that cap still chained via the lead path (_hot=True).
+    expansion: exactly ONE exchange on bucket_cols and one WindowExec.
+    Essentially-uncapped caps (oracle / brute-force parity runs) -> a
+    bucket equi-self-join for small buckets (quadratic per bucket —
+    exactly what the caller asked for), with buckets beyond even that
+    cap still chained via the lead path (_hot=True).
 
-    ``keep_cols`` (a subset of bucket_cols, constant per bucket) are
-    carried through to the output — bucket provenance for callers that
-    tag pair evidence by bucket kind.
+    ``keep_cols`` (columns constant per bucket) are carried through to
+    the output — bucket provenance for callers that tag pair evidence
+    by bucket kind.
     """
     keep = list(keep_cols or [])
     chain_width = max(1, min(chain_width, _MAX_LEADS))
@@ -148,122 +163,17 @@ def _bucket_pairs_with_hot(
     )
 
 
-def pairs_from_buckets(
-    bucketed: DataFrame,
-    bucket_cols: list[str],
-    id_col: str,
-    order_col: str,
-    cap: int,
-    chain_width: int,
-    dedup: bool = False,
-) -> DataFrame:
-    """Generate candidate (src, dst) pairs within buckets, skew-capped.
+def band_keys(fp: DataFrame, sim_bands: int, id_col: str = "url") -> DataFrame:
+    """Band-key rows (id_col, simhash, source, _bidx, _bval) of BOTH
+    banded candidate families — THE bucket key builder of stage 4.
 
-    ``bucketed`` must have ``bucket_cols + [id_col, order_col]``.
-    Returns (src, dst) with src < dst; with ``dedup=False`` (default) a
-    pair may appear once per shared bucket — callers that union several
-    pair sources dedup ONCE at the union (one shuffle instead of one per
-    source).
-
-    Shuffle budget: exactly ONE exchange on bucket_cols, and one sort
-    (the bucket-size count and every lead() share the same window spec,
-    so Spark evaluates them in a single WindowExec pass).  A member's
-    targets are its next ``j`` sorted bucket neighbors: ``j`` up to
-    bsz-1 for small buckets (all C(bsz,2) pairs, each exactly once) and
-    up to ``chain_width`` for capped ones — lead() beyond the bucket
-    end is NULL, which encodes the j <= bsz-1 bound for free.
-    """
-    out = _bucket_pairs_with_hot(
-        bucketed, bucket_cols, id_col, order_col, cap, chain_width
-    ).select("src", "dst")
-    return out.dropDuplicates(["src", "dst"]) if dedup else out
-
-
-def simhash_band_pairs(
-    fp: DataFrame,
-    hamming_k: int,
-    bands: int,
-    cap: int,
-    chain_width: int,
-    id_col: str = "url",
-) -> DataFrame:
-    """SimHash Hamming-ball candidate pairs, verified.
-
-    ``fp`` needs (id_col, simhash).  Returns (src, dst, dist, source).
-    The piece split is the pigeonhole banding trick for Hamming<=k over
-    64 bits (SURVEY §2 J2); verification is JVM-side bit_count.
-    """
-    width = 64 // bands
-    mask = (1 << width) - 1
-    pieces = F.array(
-        *[
-            F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))
-            for i in range(bands)
-        ]
-    )
-    exploded = fp.select(
-        F.col(id_col), F.col("simhash"), F.posexplode(pieces).alias("piece_idx", "piece_val")
-    )
-    pairs = pairs_from_buckets(
-        exploded, ["piece_idx", "piece_val"], id_col, "simhash", cap, chain_width
-    )
-    a = fp.select(F.col(id_col).alias("src"), F.col("simhash").alias("_sh_a"))
-    b = fp.select(F.col(id_col).alias("dst"), F.col("simhash").alias("_sh_b"))
-    return (
-        pairs.join(a, "src")
-        .join(b, "dst")
-        .withColumn("dist", F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))))
-        .filter(F.col("dist") <= hamming_k)
-        # dedup AFTER the Hamming filter: few survivors, tiny shuffle
-        .dropDuplicates(["src", "dst"])
-        .select("src", "dst", "dist", F.lit("simhash").alias("source"))
-    )
-
-
-def minhash_lsh_pairs(
-    fp: DataFrame,
-    cap: int,
-    chain_width: int,
-    id_col: str = "url",
-) -> DataFrame:
-    """MinHash-LSH candidate pairs (unverified — signature check happens
-    in edges.union_pairs where signatures are joined once per pair).
-
-    ``fp`` needs (id_col, mh_bands: array<long>, simhash) — simhash is
-    reused as the intra-bucket chaining order so that near-identical
-    documents end up adjacent inside capped mega-buckets.
-    """
-    exploded = fp.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode("mh_bands").alias("band_idx", "band_val"),
-    )
-    pairs = pairs_from_buckets(
-        exploded, ["band_idx", "band_val"], id_col, "simhash", cap, chain_width
-    )
-    return pairs.select("src", "dst", F.lit(None).cast("int").alias("dist"), F.lit("minhash").alias("source"))
-
-
-def combined_band_pairs(
-    fp: DataFrame,
-    sim_bands: int,
-    cap: int,
-    chain_width: int,
-    id_col: str = "url",
-) -> DataFrame:
-    """SimHash-piece AND MinHash-band candidate pairs in ONE exchange.
-
-    Semantically identical to
-    ``simhash_band_pairs UNION minhash_lsh_pairs`` but the kind-tagged
-    exploded rows (pieces idx 0..sim_bands-1, bands idx 64+j) go
-    through a single exchange + WindowExec instead of two, and the
-    simhash pairs skip their private fingerprint join + dedup — the
-    downstream union stage (edges.combined_candidates_with_dist) joins
-    fingerprints once for ALL pairs and applies the Hamming gate there,
-    using the provenance tag carried by ``keep_cols``.
-
-    Returns raw (src, dst, source) rows; a pair may appear once per
-    shared bucket — the union stage dedups once.
+    ``fp`` needs (id_col, simhash, mh_bands).  SimHash pigeonhole
+    pieces (the banding trick for Hamming<=k over 64 bits, SURVEY §2
+    J2) sit at idx 0..sim_bands-1 tagged ``'simhash'``; MinHash bands
+    at idx 64+j tagged ``'minhash'``.  The idx ranges are disjoint, so
+    (_bidx, _bval) alone is the bucket key and ``source`` is constant
+    per bucket.  A caller that needs one family filters on ``source``
+    before expanding, so the other family never shuffles.
     """
     width = 64 // sim_bands
     mask = (1 << width) - 1
@@ -287,14 +197,32 @@ def combined_band_pairs(
     ).select(
         id_col, "simhash", "source", (F.col("_bidx0") + 64).alias("_bidx"), "_bval"
     )
-    exploded = sim.unionByName(mh)
-    # bucket key is (idx, val) only: piece idx 0..sim_bands-1 and band
-    # idx 64+j are disjoint, so the kind is implied by the idx and the
-    # string tag stays OUT of the window sort key (measured: sorting on
-    # the string column cost more than the exchange it saved); it rides
-    # along as a keep column, constant per bucket.
-    return _bucket_pairs_with_hot(
-        exploded,
+    return sim.unionByName(mh)
+
+
+def combined_band_pairs(
+    fp: DataFrame,
+    sim_bands: int,
+    cap: int,
+    chain_width: int,
+    id_col: str = "url",
+) -> DataFrame:
+    """SimHash-piece AND MinHash-band candidate pairs in ONE exchange.
+
+    The kind-tagged band keys go through a single exchange + WindowExec;
+    the downstream union stage (edges.combined_candidates_with_dist)
+    joins fingerprints once for ALL pairs and applies the Hamming gate
+    there, using the provenance tag carried by ``keep_cols``.
+
+    Returns raw (src, dst, source) rows; a pair may appear once per
+    shared bucket — the union stage dedups once.
+    """
+    # bucket key is (idx, val) only: the kind is implied by the idx and
+    # the string tag stays OUT of the window sort key (measured: sorting
+    # on the string column cost more than the exchange it saved); it
+    # rides along as a keep column, constant per bucket.
+    return bucket_pairs(
+        band_keys(fp, sim_bands, id_col),
         ["_bidx", "_bval"],
         id_col,
         "simhash",
@@ -318,11 +246,11 @@ def cross_banded_pairs(
     Both inputs need (id_col, simhash, mh_bands).  Returns distinct
     ``(probe_id, index_id)`` — every pair that shares a SimHash
     pigeonhole piece (Hamming-ball candidates) or a MinHash band value
-    (Jaccard candidates).  Two equi-joins on bucket keys, one distinct;
-    never a crossJoin.
+    (Jaccard candidates).  One equi-join on the :func:`band_keys`
+    bucket key (idx, val), one distinct; never a crossJoin.
 
-    Scale shape: both sides shuffle on (bucket kind, idx, val).  At
-    10^12-doc state the index side is the big one — production keeps
+    Scale shape: both sides shuffle on the bucket key.  At 10^12-doc
+    state the index side is the big one — production keeps
     the state table bucketed on the band value (Iceberg bucket
     partitioning) so only the batch side moves.  ``index_bucket_cap``
     bounds skew the same way bucket_pair_cap does for self-joins: a
@@ -332,31 +260,14 @@ def cross_banded_pairs(
     absorbers under the directional gate.  None = uncapped (the oracle
     configuration, exact by pigeonhole/banding).
     """
-    width = 64 // simhash_bands
-    mask = (1 << width) - 1
-
     def keyed(fp: DataFrame, side: str) -> DataFrame:
-        pieces = F.array(
-            *[
-                F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))
-                for i in range(simhash_bands)
-            ]
+        return band_keys(fp, simhash_bands, id_col).select(
+            F.col(id_col).alias(side), "_bidx", "_bval"
         )
-        sim = fp.select(
-            F.col(id_col).alias(side),
-            F.lit("s").alias("_kind"),
-            F.posexplode(pieces).alias("_bidx", "_bval"),
-        )
-        mh = fp.select(
-            F.col(id_col).alias(side),
-            F.lit("m").alias("_kind"),
-            F.posexplode("mh_bands").alias("_bidx", "_bval"),
-        )
-        return sim.unionByName(mh)
 
     index_keyed = keyed(fp_index, "index_id")
     if index_bucket_cap is not None:
-        w = Window.partitionBy("_kind", "_bidx", "_bval").orderBy(
+        w = Window.partitionBy("_bidx", "_bval").orderBy(
             F.desc("_freq"), F.asc("index_id")
         )
         index_keyed = (
@@ -372,7 +283,7 @@ def cross_banded_pairs(
         )
     return (
         keyed(fp_probe, "probe_id")
-        .join(index_keyed, ["_kind", "_bidx", "_bval"])
+        .join(index_keyed, ["_bidx", "_bval"])
         .select("probe_id", "index_id")
         .dropDuplicates(["probe_id", "index_id"])
     )
@@ -403,12 +314,10 @@ def window_overlap_pairs(
     boilerplate) window bucket — chain pairs keep connectivity without
     the quadratic expansion and skip the evidence threshold, exactly as
     the earlier two-branch formulation did.  Same single-WindowExec
-    lead() expansion as :func:`pairs_from_buckets`.
+    lead() expansion as :func:`bucket_pairs`.
     """
     exploded = docs.select(F.col(id_col), F.explode(win_col).alias("win_hash"))
-    pairs = _bucket_pairs_with_hot(
-        exploded, ["win_hash"], id_col, id_col, cap, chain_width
-    )
+    pairs = bucket_pairs(exploded, ["win_hash"], id_col, id_col, cap, chain_width)
     return (
         pairs.groupBy("src", "dst")
         .agg(

@@ -45,6 +45,14 @@ from pyspark.sql import functions as F
 _BROADCAST_BYTES = 64 * 1024 * 1024
 _ROW_OVERHEAD = 48  # long freq field + struct/row bookkeeping
 
+# Rounds before the pointer jump engages.  Dedup graphs are star-like
+# after the directional gate (typical depth 2-3), so the early
+# full-frontier rounds would pay the label-table self-join for nothing;
+# deep chains still get O(log depth) convergence once the jump engages.
+# Exactness is unaffected: both the gather and the jump only ever lower
+# labels toward the same fixpoint.
+_JUMP_AFTER = 2
+
 
 def _label_init(nodes: DataFrame, id_col: str) -> DataFrame:
     return nodes.select(
@@ -60,8 +68,6 @@ def propagate_min_label(
     edges: DataFrame,
     id_col: str = "url",
     max_iterations: int = 50,
-    jump_after: int = 2,
-    rounds_per_action: int = 1,
 ) -> DataFrame:
     """Min-label propagation over directed edges (src -> dst).
 
@@ -70,42 +76,12 @@ def propagate_min_label(
     highest-priority node (max freq, then lexicographically min id).
 
     Per round: (1) each node takes the min of its own label and its
-    in-neighbors' labels (one join + one groupBy); (2) pointer jump —
-    each node also takes its current root's label (one self-join).
+    in-neighbors' labels (one join + one groupBy); (2) from round
+    ``_JUMP_AFTER`` on, pointer jump — each node also takes its current
+    root's label (one self-join).
     Both steps preserve the invariant "label(n) reaches n", so the
     fixpoint is the true min over ancestors; pointer jumping makes deep
     chains converge in O(log depth) rounds.
-
-    ``jump_after``: rounds before the pointer jump engages.  Dedup
-    graphs are star-like after the directional gate (typical depth
-    2-3), so the early full-frontier rounds pay the label-table
-    self-join for nothing — skipping the jump there removes the most
-    expensive join of the two biggest rounds, while deep chains still
-    get O(log depth) convergence once the jump engages.  Exactness is
-    unaffected: both the gather and the jump only ever lower labels
-    toward the same fixpoint.
-
-    ``rounds_per_action``: propagation rounds composed into ONE lazy
-    plan per checkpoint+stats action.  Implemented for r4 verdict item
-    #6 (the loop is the job's only driver-paced stage, so batching
-    rounds halves the fixed scheduling round-trips), MEASURED, and
-    REJECTED as a default: with rounds_per_action=2 the mid-batch
-    frontier is a lazily composed filter over sub-round 1's plan, so
-    sub-round 2's gather, self-rows, and pointer-jump each re-derive
-    sub-round 1's whole join/agg subtree inside the same action —
-    Spark reuses exchanges, not arbitrary common subplans, and the
-    recompute costs more than the saved driver latency.  Stage-isolated
-    2x2 A/B on the 1.2M-page scaling input (checkpoint-resume so ONLY
-    this stage runs; BENCH/BASELINE.md): s6 wall 183.9 s -> 273.3 s at
-    1 core (+49%), 67.8 s -> 87.6 s at 4 cores (+29%), outputs
-    bit-identical (270,177 clusters, equal content hash) in all four
-    arms.  Batching is exact either way (labels only ever decrease;
-    convergence detected from the LAST sub-round's change count), so
-    the knob stays for topologies where driver latency dominates, but
-    the default is 1.  Mid-batch broadcast decisions reuse the previous
-    action's measured frontier bytes with 4x headroom (the estimate is
-    ≤ rounds_per_action rounds stale; a declined broadcast is only a
-    perf choice, never a correctness one).
     """
     # DELTA (frontier) propagation: labels only ever decrease, so an
     # in-neighbor whose label did NOT change last round contributed its
@@ -122,52 +98,38 @@ def propagate_min_label(
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     old_type = labels.schema["label"].dataType.simpleString()
     changed: DataFrame | None = None  # None => full gather (round 0)
-    n_changed = -1
     frontier_bytes = -1
 
-    it = 0
-    while it < max_iterations:
-        batch = max(1, min(rounds_per_action, max_iterations - it))
-        current = labels
+    for it in range(max_iterations):
         frontier = labels if changed is None else changed
-        combined = None
-        for j in range(batch):
-            f = frontier
-            # sub-round 0 uses the measured bytes; later sub-rounds'
-            # frontiers are unmeasured (lazy), so demand 4x headroom
-            limit = _BROADCAST_BYTES if j == 0 else _BROADCAST_BYTES // 4
-            if 0 <= frontier_bytes < limit:
-                f = F.broadcast(f)
-            incoming = edges.join(f, edges["src"] == f["_nid"]).select(
-                F.col("dst").alias("_nid"),
-                "label",
-                F.lit(None).cast(old_type).alias("_old"),
+        if 0 <= frontier_bytes < _BROADCAST_BYTES:
+            frontier = F.broadcast(frontier)
+        incoming = edges.join(frontier, edges["src"] == frontier["_nid"]).select(
+            F.col("dst").alias("_nid"),
+            "label",
+            F.lit(None).cast(old_type).alias("_old"),
+        )
+        self_rows = labels.select("_nid", "label", F.col("label").alias("_old"))
+        combined = (
+            self_rows.unionByName(incoming)
+            .groupBy("_nid")
+            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+        )
+        if it >= _JUMP_AFTER:
+            # pointer jump (label <- label(label)) for O(log depth) rounds
+            roots = combined.select(
+                F.col("_nid").alias("_rid"), F.col("label").alias("_rlabel")
             )
-            self_rows = current.select("_nid", "label", F.col("label").alias("_old"))
-            combined = (
-                self_rows.unionByName(incoming)
-                .groupBy("_nid")
-                .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+            combined = combined.join(
+                roots, combined["label"]["lid"] == roots["_rid"], "left"
+            ).select(
+                "_nid",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("_rlabel"), F.col("label"))
+                ).alias("label"),
+                "_old",
             )
-            if it + j >= jump_after:
-                # pointer jump (label <- label(label)) for O(log depth) rounds
-                roots = combined.select(
-                    F.col("_nid").alias("_rid"), F.col("label").alias("_rlabel")
-                )
-                combined = combined.join(
-                    roots, combined["label"]["lid"] == roots["_rid"], "left"
-                ).select(
-                    "_nid",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("_rlabel"), F.col("label"))
-                    ).alias("label"),
-                    "_old",
-                )
-            frontier = combined.filter(F.col("label") != F.col("_old")).select(
-                "_nid", "label"
-            )
-            current = combined.drop("_old")
-        # LAZY checkpoint: the stats agg below is the BATCH's single
+        # LAZY checkpoint: the stats agg below is the round's single
         # action — it materializes the checkpoint blocks AND computes
         # the convergence stats in one pass (the r2 shape ran an
         # eager-checkpoint job plus a separate stats job per round,
@@ -189,7 +151,6 @@ def propagate_min_label(
         per_row = 2 * (stats["id_len"] or 0.0) + _ROW_OVERHEAD
         frontier_bytes = int(n_changed * per_row)
         labels = jumped.drop("_old")
-        it += batch
         if n_changed == 0:
             break
     return labels.select(F.col("_nid").alias(id_col), F.col("label")["lid"].alias("root_id"))

@@ -15,59 +15,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def candidate_pairs_with_dist(
-    pair_dfs: list[DataFrame],
-    fp: DataFrame,
-    id_col: str = "url",
-) -> DataFrame:
-    """Union candidate-pair sources into one row per (src, dst) with
-    source provenance and SimHash Hamming distance.
-
-    Dedup happens ONCE here across all sources (one shuffle instead of
-    one per source).  ``dist`` is always populated: the directional rule
-    needs dist==0 to absorb identical fingerprints unconditionally
-    (naive.rs:31); this universal join carries ONLY the 8-byte simhash
-    per side.
-
-    The output feeds two verify branches in :func:`verify_pairs`;
-    materialize it between the two calls (the pipeline checkpoints it
-    as stage s4) — otherwise Catalyst executes this whole subtree, and
-    every candidate generator under it, once per branch.
-    """
-    all_pairs = pair_dfs[0]
-    for p in pair_dfs[1:]:
-        all_pairs = all_pairs.unionByName(p)
-    best = all_pairs.groupBy("src", "dst").agg(
-        F.array_sort(F.collect_set("source")).alias("sources"),
-    )
-    sh_a = fp.select(F.col(id_col).alias("src"), F.col("simhash").alias("_sh_a"))
-    sh_b = fp.select(F.col(id_col).alias("dst"), F.col("simhash").alias("_sh_b"))
-    return (
-        best.join(sh_a, "src")
-        .join(sh_b, "dst")
-        .withColumn("dist", F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))))
-        .drop("_sh_a", "_sh_b")
-    )
-
-
 def combined_candidates_with_dist(
     pair_dfs: list[DataFrame],
     fp: DataFrame,
     hamming_k: int,
     id_col: str = "url",
 ) -> DataFrame:
-    """candidate_pairs_with_dist for RAW kind-tagged pair sources
-    (candidates.combined_band_pairs + the window pass): pairs arrive
-    un-verified, so the Hamming gate that simhash_band_pairs used to
-    apply privately happens HERE, on the single fingerprint join this
-    stage already does for dist annotation.
+    """Union RAW kind-tagged candidate-pair sources
+    (candidates.combined_band_pairs + the window pass) into one row per
+    (src, dst) with source provenance and SimHash Hamming distance.
 
-    Exact-equivalence rule: 'simhash' counts as evidence only when
-    dist <= k — a piece-shared pair beyond the Hamming ball had its
-    simhash provenance dropped in the two-generator formulation (the
-    private filter removed it before the union), so it is stripped
-    here too; a pair whose remaining evidence set is empty is dropped.
-    Verify semantics downstream (verify_pairs) are unchanged.
+    Dedup happens ONCE here across all sources (one shuffle instead of
+    one per source).  ``dist`` is always populated: the directional rule
+    needs dist==0 to absorb identical fingerprints unconditionally
+    (naive.rs:31); this universal join carries ONLY the 8-byte simhash
+    per side.  Pairs arrive un-verified, so the Hamming gate happens
+    here too: 'simhash' counts as evidence only when dist <= k (a
+    piece-shared pair beyond the Hamming ball has that provenance
+    stripped), and a pair whose remaining evidence set is empty is
+    dropped.
+
+    The output feeds two verify branches in :func:`verify_pairs`;
+    materialize it between the two calls (the pipeline checkpoints it
+    as stage s4) — otherwise Catalyst executes this whole subtree, and
+    every candidate generator under it, once per branch.
     """
     all_pairs = pair_dfs[0]
     for p in pair_dfs[1:]:
@@ -134,20 +105,6 @@ def verify_pairs(
     )
     return passthrough.unionByName(verified_lsh).select(
         "src", "dst", "dist", "sources", "sig_sim"
-    )
-
-
-def union_pairs(
-    pair_dfs: list[DataFrame],
-    fp: DataFrame,
-    jaccard_threshold: float,
-    id_col: str = "url",
-) -> DataFrame:
-    """One-shot convenience: candidate union + verify, no mid
-    materialization (small inputs / tests; the pipeline checkpoints the
-    candidate stage between the two halves instead)."""
-    return verify_pairs(
-        candidate_pairs_with_dist(pair_dfs, fp, id_col), fp, jaccard_threshold, id_col
     )
 
 

@@ -148,11 +148,8 @@ def run_dedup_pipeline(
     # signature-join branch, and without a cut here Catalyst executes
     # the whole candidate DAG once per branch (measured 2x stage cost).
     # The sim+mh expansions ride ONE kind-tagged exchange + WindowExec
-    # (combined_band_pairs) and the Hamming gate moves to the union
-    # stage's single fingerprint join — byte-identical pair evidence to
-    # the two-generator formulation (combined_candidates_with_dist
-    # strips 'simhash' provenance beyond the Hamming ball exactly as
-    # the private filter used to).
+    # (combined_band_pairs) and the Hamming gate runs on the union
+    # stage's single fingerprint join (combined_candidates_with_dist).
     def build_candidates() -> DataFrame:
         sources = [
             combined_band_pairs(

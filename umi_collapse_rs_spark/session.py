@@ -13,6 +13,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_GB = 24
+
+
+def default_driver_memory() -> str:
+    """Driver heap default: ``min(24g, MemTotal / 2)``.
+
+    In local mode the driver heap is all executor memory, but a heap
+    sized past physical RAM gets the JVM OOM-killed by the kernel
+    instead of spilling; half of MemTotal leaves room for the Python
+    workers and the page cache.  ``SPARK_DRIVER_MEMORY`` overrides it.
+    """
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{_MAX_DRIVER_GB}g"
+    return f"{min(_MAX_DRIVER_GB * 1024, kib // 2048)}m"
+
 
 def get_spark(
     app_name: str = "umi-collapse-rs-spark",
@@ -46,7 +64,10 @@ def get_spark(
         # this box (150k-page run, local[32]): heap 64g -> 12.6 min sys
         # time (kernel page zeroing under G1 churn), 16g -> 2.7 min; and
         # ParallelGC beats G1 by ~25% wall on this batch workload.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),

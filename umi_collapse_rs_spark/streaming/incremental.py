@@ -100,13 +100,16 @@ def _checkpoint_query_id(spark: SparkSession, checkpoint_dir: str) -> str | None
 
 def batch_fingerprint(batch_df: DataFrame) -> str:
     """Order-independent content fingerprint of a micro-batch: row
-    count + XOR of per-row xxhash64 over (url, text) — url alone would
+    count + SUM of per-row xxhash64 over (url, text) — url alone would
     call a re-crawl of the same urls with CHANGED text a "re-delivery".
-    One O(batch) aggregate, O(1) driver bytes — never a collect of the
-    batch itself."""
+    A sum, not an XOR: XOR cancels rows that repeat an even number of
+    times ({A, A, B} and {C, C, B} would collide).  The sum runs over
+    decimal(38,0), which cannot overflow (ANSI mode would raise on a
+    long sum) below ~10^19 rows.  One O(batch) aggregate, O(1) driver
+    bytes — never a collect of the batch itself."""
     row = batch_df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(url, text))").alias("x"),
+        F.sum(F.xxhash64("url", "text").cast("decimal(38,0)")).alias("x"),
     ).head()
     return f"{row['n']}:{row['x']}"
 
