@@ -52,8 +52,6 @@ def main(argv: list[str] | None = None) -> int:
                       help="fold committed segments into a fresh base, then exit")
     ap.add_argument("--state", required=True, help="state root (manifest/ + base-g*/ + seg-*/)")
     ap.add_argument("--output", help="batch output dir (assignments/); required with --input")
-    ap.add_argument("--algo", choices=["dir"], default="dir",
-                    help="bootstrap clustering rule (incremental absorption is directional by contract)")
     ap.add_argument("--merge", choices=["earliest", "quality", "any"], default="earliest")
     ap.add_argument("--index-bucket-cap", type=int, default=64,
                     help="state-probe skew bound (canonicals kept per band bucket); 0 = uncapped")
@@ -70,8 +68,8 @@ def main(argv: list[str] | None = None) -> int:
     from umi_collapse_rs_spark.plans.state_store import StateStore
     from umi_collapse_rs_spark.session import get_spark
 
+    # the rule is always directional (DedupConfig's default algo)
     cfg = DedupConfig(
-        algo=args.algo,
         merge=args.merge,
         window_tokens=0,
         **({"shuffle_partitions": args.shuffle_partitions} if args.shuffle_partitions else {}),

@@ -9,6 +9,8 @@ fingerprint mode, and the no-crossJoin plan shape.
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,13 @@ from umi_collapse_rs_spark.plans.incremental import (
 from umi_collapse_rs_spark.plans.pipeline import run_dedup_pipeline
 
 CFG = DedupConfig(window_tokens=0)  # numpy fingerprints, default gates
+
+# sha256 of the sorted (url, canonical_url, via) assignments and of the
+# sorted delta rows (sha_new, freq_delta, canon_new url+freq) of the
+# fixture_500 split; identical at local[4] / 8 partitions and local[2]
+# / 3 partitions
+_INC_ASSIGNMENTS_SHA256 = "985e154994d1ce9bf08a8a95a98418b75eb07acf9cdb5d5015a9f828ae04b9e1"
+_INC_DELTA_SHA256 = "81ffcd4aac79b6ad4c659412e92963c5b8d72b6f260b9fbd28c5a49f10e51aa1"
 
 
 def _split_fixture(spark, fixture_500):
@@ -158,6 +167,33 @@ def test_no_cartesian_product_in_plan(spark, fixture_500):
     plan = inc.assignments._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _sha256_rows(rows) -> str:
+    blob = "".join("\t".join(map(str, r)) + "\n" for r in sorted(rows))
+    return hashlib.sha256(blob.encode()).hexdigest()
+
+
+def incremental_digests(inc) -> tuple[str, str]:
+    """(assignments, delta) sha256 of one incremental_assign result."""
+    d = inc.delta
+    assignments = _sha256_rows(
+        tuple(r) for r in inc.assignments.select("url", "canonical_url", "via").collect()
+    )
+    delta = _sha256_rows(
+        [("sha_new", r["text_sha"], r["canonical_url"]) for r in d.sha_new.collect()]
+        + [("freq_delta", r["url"], r["added"]) for r in d.freq_delta.collect()]
+        + [("canon_new", r["url"], r["freq"]) for r in d.canon_new.collect()]
+    )
+    return assignments, delta
+
+
+@pytest.mark.parametrize("cfg", [CFG, DedupConfig()], ids=["window_tokens=0", "default"])
+def test_incremental_outputs_are_pinned(spark, inc_run, cfg):
+    """Assignments and the persisted delta are pinned, and equal with
+    and without window_tokens: the window pass is bulk-only."""
+    inc = incremental_assign(spark, inc_run["state"], inc_run["new"], cfg)
+    assert incremental_digests(inc) == (_INC_ASSIGNMENTS_SHA256, _INC_DELTA_SHA256)
 
 
 def test_empty_state_degenerates_to_full_batch_clustering(spark, fixture_500):

@@ -11,6 +11,21 @@ from pyspark.sql import functions as F
 from umi_collapse_rs_spark import oracle
 from umi_collapse_rs_spark.operators.exact import exact_collapse, with_norm
 
+# sha256 of the sorted (url, canonical_url) rows of
+# run_dedup_pipeline(fixture_500, DedupConfig()) — numpy fingerprints
+# with the window pass; identical at local[4] / 8 partitions and
+# local[2] / 3 partitions
+_CLUSTERS_SHA256 = "2ef8b8e605612eadeba6a59e955061a0be9217439e5efaea9015ac23fa23fe29"
+
+
+def clusters_digest(clusters) -> str:
+    blob = "".join(f"{u}\t{c}\n" for u, c in sorted(zip(clusters.url, clusters.canonical_url)))
+    return hashlib.sha256(blob.encode()).hexdigest()
+
+
+def test_cluster_assignments_are_pinned(pipeline_500):
+    assert clusters_digest(pipeline_500["clusters"]) == _CLUSTERS_SHA256
+
 
 def test_recall_vs_planted_truth(pipeline_500):
     clusters, truth = pipeline_500["clusters"], pipeline_500["truth"]

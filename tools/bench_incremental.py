@@ -296,7 +296,7 @@ consecutive batches of ~{batch_pages[0]:,} pages each (digit 9, sliced
 by second-last digit) chained through `plans/incremental.py` + the
 log-structured state store (`plans/state_store.py`).  Compute bytes
 from the Spark UI REST API per phase; state bytes measured on disk per
-commit.  local[32], warm JVM.
+commit.  {spark.sparkContext.master}, warm JVM.
 
 ## The chain
 

@@ -42,10 +42,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _spark_submit(args: list[str], **kw) -> subprocess.Popen:
+def _spark_submit(master: str, args: list[str], **kw) -> subprocess.Popen:
     cmd = [
         "spark-submit",
-        "--master", "local[8]",
+        "--master", master,
         "--py-files", "/tmp/ucs_killprobe.zip",
         os.path.join(REPO, "jobs", "run_stream_incremental.py"),
         *args,
@@ -87,7 +87,8 @@ def main() -> int:
     from umi_collapse_rs_spark.plans.state_store import StateStore
     from umi_collapse_rs_spark.session import get_spark
 
-    spark = get_spark(app_name="kill_probe", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="kill_probe", shuffle_partitions=8)
+    master = spark.sparkContext.master
 
     # corpus = last digit 0-8; drops = digit 9, one parquet FILE each
     # (maxFilesPerTrigger=1 -> one micro-batch per drop)
@@ -122,7 +123,7 @@ def main() -> int:
 
     # --- run A, SIGKILL after the K-th state commit --------------------
     v0 = _manifest_version(f"{wd}/state_A")
-    pA = _spark_submit(stream_args("A"))
+    pA = _spark_submit(master, stream_args("A"))
     target = v0 + args.kill_after_commits
     deadline = time.monotonic() + 600
     while time.monotonic() < deadline:
@@ -141,7 +142,7 @@ def main() -> int:
     v_killed = _manifest_version(f"{wd}/state_A")
 
     # --- restart A on the same checkpoint: drains the remainder --------
-    pA2 = _spark_submit(stream_args("A"))
+    pA2 = _spark_submit(master, stream_args("A"))
     outA2, _ = pA2.communicate(timeout=900)
     if pA2.returncode != 0:
         print(json.dumps({"error": "restart failed", "rc": pA2.returncode}))
@@ -149,7 +150,7 @@ def main() -> int:
     summary_A = json.loads(outA2.strip().splitlines()[-1])
 
     # --- run B uninterrupted -------------------------------------------
-    pB = _spark_submit(stream_args("B"))
+    pB = _spark_submit(master, stream_args("B"))
     outB, _ = pB.communicate(timeout=900)
     if pB.returncode != 0:
         print(json.dumps({"error": "run B failed", "rc": pB.returncode}))

@@ -32,7 +32,7 @@ README.md:31-32).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Broadcast the gather frontier when its estimated size fits
@@ -54,13 +54,10 @@ _ROW_OVERHEAD = 48  # long freq field + struct/row bookkeeping
 _JUMP_AFTER = 2
 
 
-def _label_init(nodes: DataFrame, id_col: str) -> DataFrame:
-    return nodes.select(
-        F.col(id_col).alias("_nid"),
-        F.struct(
-            (-F.col("freq")).cast("long").alias("nf"), F.col(id_col).alias("lid")
-        ).alias("label"),
-    )
+def priority_key(freq_col: str, id_col: str) -> Column:
+    """``struct(-freq, id)``: its min is the greedy processing order
+    (max freq, then lexicographically min id)."""
+    return F.struct((-F.col(freq_col)).cast("long").alias("nf"), F.col(id_col).alias("lid"))
 
 
 def propagate_min_label(
@@ -94,7 +91,9 @@ def propagate_min_label(
     # localCheckpoint), so the big edge table stops shuffling entirely
     # for the tail rounds.  At cluster scale early rounds exceed the
     # hint threshold and run as ordinary shuffle joins.
-    labels = _label_init(nodes, id_col).localCheckpoint(eager=True)
+    labels = nodes.select(
+        F.col(id_col).alias("_nid"), priority_key("freq", id_col).alias("label")
+    ).localCheckpoint(eager=True)
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     old_type = labels.schema["label"].dataType.simpleString()
     changed: DataFrame | None = None  # None => full gather (round 0)
@@ -215,10 +214,9 @@ def adjacency_assign(
         .dropDuplicates(["src", "dst"])
         .localCheckpoint(eager=True)
     )
-    key = F.struct((-F.col("freq")).cast("long").alias("nf"), F.col(id_col).alias("lid"))
-    live = nodes.select(F.col(id_col).alias("_nid"), key.alias("key")).localCheckpoint(
-        eager=True
-    )
+    live = nodes.select(
+        F.col(id_col).alias("_nid"), priority_key("freq", id_col).alias("key")
+    ).localCheckpoint(eager=True)
     roots = live.limit(0).select("_nid", "key")  # accumulated root set
     assigned_parts: list[DataFrame] = []
     for _ in range(max_iterations):

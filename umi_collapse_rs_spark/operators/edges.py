@@ -11,8 +11,26 @@ rule ``2*f_child <= f_parent + 1``, f32 truncation included (SURVEY
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def hamming_col(a: str, b: str) -> Column:
+    """SimHash Hamming distance of two long columns."""
+    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
+
+
+def sig_sim_col(a: str, b: str) -> Column:
+    """Fraction of equal positions of two MinHash signatures (the
+    Jaccard estimate), a zip_with/filter Column expression, JVM-side."""
+    n_eq = F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
+    return n_eq / F.size(a)
+
+
+def absorb_limit(p: float, f: str) -> Column:
+    """Largest child freq a parent of freq ``f`` absorbs:
+    ``(p * (f+1)) as i32`` (directional.rs:38, f32 truncation)."""
+    return F.floor(F.lit(p) * (F.col(f) + 1)).cast("long")
 
 
 def combined_candidates_with_dist(
@@ -51,7 +69,7 @@ def combined_candidates_with_dist(
     with_dist = (
         best.join(sh_a, "src")
         .join(sh_b, "dst")
-        .withColumn("dist", F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))))
+        .withColumn("dist", hamming_col("_sh_a", "_sh_b"))
         .drop("_sh_a", "_sh_b")
     )
     gated_sources = F.when(
@@ -79,8 +97,7 @@ def verify_pairs(
 
     ``fp`` needs (id_col, mh_sig: array<long>).  The signature join
     happens on candidate PAIRS (a small fraction of the corpus), never
-    all-pairs; ``sig_sim`` is a zip_with/filter Column expression,
-    JVM-side.
+    all-pairs; ``sig_sim`` is :func:`sig_sim_col`.
     """
     accepted_outright = F.array_contains("sources", "simhash") | F.array_contains(
         "sources", "window"
@@ -94,12 +111,11 @@ def verify_pairs(
     # the fat payload out of the big pair shuffle
     sig_a = fp.select(F.col(id_col).alias("src"), F.col("mh_sig").alias("_sig_a"))
     sig_b = fp.select(F.col(id_col).alias("dst"), F.col("mh_sig").alias("_sig_b"))
-    n_eq = F.size(F.filter(F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda b: b))
     verified_lsh = (
         with_dist.filter(~accepted_outright)
         .join(sig_a, "src")
         .join(sig_b, "dst")
-        .withColumn("sig_sim", n_eq / F.size("_sig_a"))
+        .withColumn("sig_sim", sig_sim_col("_sig_a", "_sig_b"))
         .filter(F.col("sig_sim") >= F.lit(jaccard_threshold))
         .drop("_sig_a", "_sig_b")
     )
@@ -126,12 +142,9 @@ def directional_edges(pairs: DataFrame, fp: DataFrame, p: float = 0.5, id_col: s
     fa = fp.select(F.col(id_col).alias("src"), F.col("freq").alias("_f_src"))
     fb = fp.select(F.col(id_col).alias("dst"), F.col("freq").alias("_f_dst"))
     pf = pairs.join(fa, "src").join(fb, "dst")
-    # f32 truncation as in the reference: (p * (f+1)) as f32 as i32
-    thr_src = F.floor(F.lit(p) * (F.col("_f_src") + 1)).cast("long")
-    thr_dst = F.floor(F.lit(p) * (F.col("_f_dst") + 1)).cast("long")
     zero = F.col("dist") == 0
-    fwd = pf.filter(zero | (F.col("_f_dst") <= thr_src)).select("src", "dst")
-    bwd = pf.filter(zero | (F.col("_f_src") <= thr_dst)).select(
+    fwd = pf.filter(zero | (F.col("_f_dst") <= absorb_limit(p, "_f_src"))).select("src", "dst")
+    bwd = pf.filter(zero | (F.col("_f_src") <= absorb_limit(p, "_f_dst"))).select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
     return fwd.unionByName(bwd)

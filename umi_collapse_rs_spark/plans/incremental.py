@@ -25,11 +25,16 @@ Assignment contract (deterministic; "state wins"):
    rep iff ``dist == 0 OR f_batch <= trunc(p * (f_state + 1))``
    (reference semantics, directional.rs:38; state is history, so only
    the state->batch direction exists).  Among several absorbing
-   canonicals the highest-priority one wins (max freq, then min url —
-   the same key the full pipeline's min-label clustering uses).
-3. **new**    — batch reps matched by neither step run the standard
-   within-batch pipeline (candidates -> verify -> directional gate ->
-   min-label clustering) and form new clusters.
+   canonicals the highest-priority one wins (cluster.priority_key:
+   max freq, then min url — the same key the full pipeline's
+   min-label clustering uses).
+3. **new**    — batch reps matched by neither step form new clusters
+   through the full pipeline's builders (plans/pipeline.py
+   ``candidates`` -> ``verify_pairs`` -> directional gate ->
+   ``pair_nodes`` -> min-label clustering), as the batch is normalized
+   and fingerprinted by ``normalized_pages`` / ``fingerprints``.  The
+   rule is always directional, and the window pass is bulk-only (state
+   canonicals carry no window hashes).
 
 Divergence from a full-corpus rerun, documented: a batch rep absorbed
 by state ("state wins") does not also bridge two batch-only clusters,
@@ -45,28 +50,28 @@ two chained batches).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from umi_collapse_rs_spark.config import DedupConfig
-from umi_collapse_rs_spark.operators.candidates import (
-    combined_band_pairs,
-    cross_banded_pairs,
-)
-from umi_collapse_rs_spark.operators.cluster import propagate_min_label
+from umi_collapse_rs_spark.operators.candidates import cross_banded_pairs
+from umi_collapse_rs_spark.operators.cluster import priority_key, propagate_min_label
 from umi_collapse_rs_spark.operators.edges import (
-    combined_candidates_with_dist,
+    absorb_limit,
     directional_edges,
+    hamming_col,
+    sig_sim_col,
     verify_pairs,
 )
-from umi_collapse_rs_spark.operators.exact import exact_collapse, with_norm
-
-# priority key of a canonical under the directional rule: max freq,
-# then lexicographically min url (cluster.py's struct(-freq, id))
-def _prio(freq_col: str, url_col: str):
-    return F.struct((-F.col(freq_col)).cast("long").alias("nf"), F.col(url_col).alias("lid"))
+from umi_collapse_rs_spark.operators.exact import exact_collapse
+from umi_collapse_rs_spark.plans.pipeline import (
+    candidates,
+    fingerprints,
+    normalized_pages,
+    pair_nodes,
+)
 
 
 @dataclass
@@ -127,30 +132,11 @@ def build_state(res) -> DedupState:
     return DedupState(sha_index=sha_index, canonicals=canonicals)
 
 
-def _batch_fingerprints(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    fp_cols = ["url", "freq", "simhash", "mh_bands", "mh_sig"]
-    if cfg.fingerprint == "sql":
-        from umi_collapse_rs_spark.functions.sqlfp import with_sql_fingerprints
-
-        return with_sql_fingerprints(
-            reps, "text_norm", cfg.shingle_k, cfg.lsh_bands
-        ).select(*fp_cols)
-    from umi_collapse_rs_spark.functions.udfs import make_combined_fingerprint_udf
-
-    fp_udf = make_combined_fingerprint_udf(
-        cfg.shingle_k, cfg.minhash_perms, cfg.lsh_bands, cfg.hash_seed
-    )
-    spread = reps.repartition(cfg.shuffle_partitions, "url")
-    return spread.select(
-        "url", "freq", fp_udf("text_norm").alias("_fp")
-    ).select("url", "freq", *[F.col(f"_fp.{c}").alias(c) for c in fp_cols[2:]])
-
-
 def incremental_assign(
     spark: SparkSession,
     state: DedupState,
     new_pages: DataFrame,
-    cfg: DedupConfig = DedupConfig(window_tokens=0),
+    cfg: DedupConfig = DedupConfig(),
     index_bucket_cap: int | None = None,
 ) -> IncrementalResult:
     """Assign every page of ``new_pages`` to an existing or new cluster.
@@ -160,17 +146,18 @@ def incremental_assign(
     ``index_bucket_cap``: skew bound for the state-probe join (see
     cross_banded_pairs); None = exact (oracle configuration).
 
+    The batch runs through plans/pipeline.py's ``normalized_pages``,
+    ``fingerprints``, ``candidates`` and ``pair_nodes`` with
+    ``window_tokens=0`` (the window pass is bulk-only), cut by lazy
+    local checkpoints; the rule is always directional.
+
     Shuffle budget: exact step 1 hash-agg + 1 broadcast-or-shuffle hash
     join on text_sha; near step 2 bucket-key exchanges + pair-sized
     fingerprint joins; residual step = the full pipeline's stage 4-6
     shape on the (typically small) unmatched remainder only.
     """
-    in_cols = [c for c in ("url", "warc_ts", "text", "lang") if c in new_pages.columns]
-    pages_norm = with_norm(new_pages.select(*in_cols)).select(
-        "url", "warc_ts", *(["lang"] if "lang" in in_cols else []),
-        "text_sha", "text_norm", "text_len",
-    )
-    reps_n, members_n = exact_collapse(pages_norm, cfg.merge)
+    cfg = replace(cfg, window_tokens=0)
+    reps_n, members_n = exact_collapse(normalized_pages(new_pages), cfg.merge)
     # the batch rep set feeds 3+ consumers (exact probe, fingerprints,
     # final expansion) — cut once
     reps_n = reps_n.localCheckpoint(eager=False)
@@ -207,7 +194,7 @@ def incremental_assign(
     rest = reps_n.join(sha_idx.select("text_sha"), "text_sha", "left_anti")
 
     # --- step 2: banded near probe against canonicals ---------------
-    fp_n = _batch_fingerprints(rest, cfg).localCheckpoint(eager=False)
+    fp_n = fingerprints(rest, cfg).localCheckpoint(eager=False)
     cand = cross_banded_pairs(
         fp_n, state.canonicals, cfg.simhash_bands, index_bucket_cap
     )
@@ -223,27 +210,23 @@ def incremental_assign(
         F.col("mh_sig").alias("_sig_i"),
         F.col("freq").alias("_f_i"),
     )
-    n_eq = F.size(
-        F.filter(F.zip_with("_sig_p", "_sig_i", lambda x, y: x == y), lambda b: b)
-    )
-    dist = F.bit_count(F.col("_sh_p").bitwiseXOR(F.col("_sh_i")))
     verified = (
         cand.join(sh_p, "probe_id")
         .join(sh_i, "index_id")
-        .withColumn("_dist", dist)
-        .withColumn("_sig_sim", n_eq / F.size("_sig_p"))
+        .withColumn("_dist", hamming_col("_sh_p", "_sh_i"))
+        .withColumn("_sig_sim", sig_sim_col("_sig_p", "_sig_i"))
         .filter(
             (F.col("_dist") <= cfg.hamming_k)
             | (F.col("_sig_sim") >= F.lit(cfg.jaccard_threshold))
         )
     )
-    # directional gate, state->batch direction only (f32 truncation as
-    # in the reference: (p * (f+1)) as i32 — edges.directional_edges)
-    thr = F.floor(F.lit(cfg.directional_p) * (F.col("_f_i") + 1)).cast("long")
-    gated = verified.filter((F.col("_dist") == 0) | (F.col("_f_p") <= thr))
+    # directional gate, state->batch direction only
+    gated = verified.filter(
+        (F.col("_dist") == 0) | (F.col("_f_p") <= absorb_limit(cfg.directional_p, "_f_i"))
+    )
     near_hit = (
         gated.groupBy("probe_id")
-        .agg(F.min_by("index_id", _prio("_f_i", "index_id")).alias("canonical_url"))
+        .agg(F.min_by("index_id", priority_key("_f_i", "index_id")).alias("canonical_url"))
         .select(
             F.col("probe_id").alias("rep_url"), "canonical_url", F.lit("near").alias("via")
         )
@@ -256,26 +239,16 @@ def incremental_assign(
 
     # --- step 3: residual within-batch clustering -------------------
     fp_r = fp_n.join(near_hit.select(F.col("rep_url").alias("url")), "url", "left_anti")
-    fp_r = fp_r.localCheckpoint(eager=False)  # feeds both candidate generators + verify
-    candidates = combined_candidates_with_dist(
-        [combined_band_pairs(fp_r, cfg.simhash_bands, cfg.bucket_pair_cap, cfg.chain_width)],
-        fp_r,
-        cfg.hamming_k,
-        # cut between candidate union and the two verify branches, and
-        # again after verify (pairs feed the gate, the node set, and the
-        # clustering loop) — mirrors the pipeline's s4/s5 stage cuts
-    ).localCheckpoint(eager=False)
-    r_pairs = verify_pairs(candidates, fp_r, cfg.jaccard_threshold).localCheckpoint(
-        eager=False
-    )
+    fp_r = fp_r.localCheckpoint(eager=False)  # feeds the candidate build + verify
+    # cut between candidate union and the two verify branches, and
+    # again after verify (pairs feed the gate, the node set, and the
+    # clustering loop) — mirrors the pipeline's s4/s5 stage cuts
+    r_cands = candidates(fp_r, cfg).localCheckpoint(eager=False)
+    r_pairs = verify_pairs(r_cands, fp_r, cfg.jaccard_threshold).localCheckpoint(eager=False)
     r_edges = directional_edges(r_pairs, fp_r, cfg.directional_p)
-    r_nodes_in_pairs = (
-        r_pairs.select(F.col("src").alias("url"))
-        .unionByName(r_pairs.select(F.col("dst").alias("url")))
-        .dropDuplicates(["url"])
+    r_roots = propagate_min_label(
+        pair_nodes(r_pairs, fp_r), r_edges, "url", cfg.max_cc_iterations
     )
-    r_nodes = fp_r.select("url", "freq").join(r_nodes_in_pairs, "url", "left_semi")
-    r_roots = propagate_min_label(r_nodes, r_edges, "url", cfg.max_cc_iterations)
     new_hit = (
         fp_r.select("url")
         .join(r_roots, "url", "left")

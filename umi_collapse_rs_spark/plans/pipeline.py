@@ -8,15 +8,18 @@ everything in one arena on one thread) becomes shuffle-partitioned
 dataflow with no driver-side per-group work.
 
     stage 0  ingest      pages (url, warc_ts, html, text, lang)
-    stage 1  normalize   text_norm + text_sha            [codegen only]
-    stage 2  exact       exact-dup collapse -> reps+freq [1 shuffle]
-    stage 3  fingerprint simhash / minhash bands / sigs  [2 pandas UDFs]
-    stage 4  candidates  banded self-joins, skew-capped
-    stage 5  edges       verify + directional gate
-    stage 6  cluster     min-label propagation (dir|adj|cc)
+    stage 1  normalize   text_norm + text_sha            [codegen only]   normalized_pages *
+    stage 2  exact       exact-dup collapse -> reps+freq [1 shuffle]      exact_collapse *
+    stage 3  fingerprint simhash / minhash bands / sigs  [1 pandas UDF]   fingerprints *
+    stage 4  candidates  banded self-joins, skew-capped                   candidates *
+    stage 5  edges       verify + directional gate                        verify_pairs *
+    stage 6  cluster     min-label propagation (dir|adj|cc)               pair_nodes *
     stage 7  canonical   clusters table
-    stage 8  window      long-verbatim-overlap pairs (feeds stage 5)
+    stage 8  window      long-verbatim-overlap pairs (feeds stage 5)      bulk-only
     stage 9  outputs     clusters / metrics / lineage
+
+``*``: plans/incremental.py builds its batch chain with the same
+function; each caller keeps its own cuts and ``propagate_min_label`` call.
 """
 
 from __future__ import annotations
@@ -62,6 +65,72 @@ class DedupResult:
     fp: DataFrame | None = None     # (url, freq, simhash, mh_bands, mh_sig[, win_hashes])
 
 
+def normalized_pages(pages: DataFrame) -> DataFrame:
+    """Stage 1 projection: normalize once, keeping only the columns
+    downstream stages read.  html and the raw text stay behind in the
+    source scan (the output join re-reads text from the source)."""
+    in_cols = [c for c in ("url", "warc_ts", "text", "lang") if c in pages.columns]
+    keep = ["url", "warc_ts", *(["lang"] if "lang" in in_cols else []), "text_sha", "text_norm", "text_len"]
+    return with_norm(pages.select(*in_cols)).select(*keep)
+
+
+def fingerprints(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Stage 3: (url, freq, simhash, mh_bands, mh_sig[, win_hashes iff
+    ``cfg.window_tokens``]).  'numpy': the pandas UDF (the only Python in
+    the pipeline); 'sql': Column expressions bit-reproducible in the
+    DuckDB oracle (functions/sqlfp.py)."""
+    fp_cols = ["url", "freq", "simhash", "mh_bands", "mh_sig"]
+    if cfg.window_tokens:
+        fp_cols.append("win_hashes")
+    if cfg.fingerprint == "sql":
+        from umi_collapse_rs_spark.functions.sqlfp import with_sql_fingerprints
+
+        return with_sql_fingerprints(
+            reps, "text_norm", cfg.shingle_k, cfg.lsh_bands
+        ).select(*fp_cols)
+    fp_udf = make_combined_fingerprint_udf(
+        cfg.shingle_k, cfg.minhash_perms, cfg.lsh_bands, cfg.hash_seed,
+        window_tokens=cfg.window_tokens, window_stride=cfg.window_stride,
+    )
+    # re-spread rows before the UDF: the exact-collapse output is
+    # partitioned by text_sha ranges whose byte sizes can skew; a
+    # straggler Arrow batch would serialize the whole stage
+    return reps.repartition(cfg.shuffle_partitions, "url").select(
+        "url", "freq", fp_udf("text_norm").alias("_fp")
+    ).select("url", "freq", *[F.col(f"_fp.{c}").alias(c) for c in fp_cols[2:]])
+
+
+def candidates(fp: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Stage 4: simhash + minhash band pairs (one source-tagged exchange),
+    plus window pairs iff ``cfg.window_tokens``, unioned + dedup'd +
+    Hamming-gated.  Cut the result before :func:`verify_pairs`, whose two
+    branches would otherwise each re-run the candidate DAG (measured 2x)."""
+    sources = [
+        combined_band_pairs(fp, cfg.simhash_bands, cfg.bucket_pair_cap, cfg.chain_width)
+    ]
+    if cfg.window_tokens:
+        sources.append(
+            window_overlap_pairs(
+                fp, cfg.min_shared_windows, cfg.bucket_pair_cap, cfg.chain_width
+            ).select("src", "dst", "source")
+        )
+    return combined_candidates_with_dist(sources, fp, cfg.hamming_k)
+
+
+def pair_nodes(pairs: DataFrame, fp: DataFrame) -> DataFrame:
+    """Stage 6 node set (url, freq): ONLY nodes of a verified pair.
+    Unique pages (most of a real crawl) stay out of the iterative loop
+    and become singletons through the caller's left-join + coalesce —
+    ~10 TB instead of ~160 TB of label shuffle per round at 10^12 docs
+    (SCALE.md)."""
+    ids = (
+        pairs.select(F.col("src").alias("url"))
+        .unionByName(pairs.select(F.col("dst").alias("url")))
+        .dropDuplicates(["url"])
+    )
+    return fp.select("url", "freq").join(ids, "url", "left_semi")
+
+
 def run_dedup_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -87,31 +156,15 @@ def run_dedup_pipeline(
             }
         )
 
-    if cfg.fingerprint == "numpy":
-        fp_udf = make_combined_fingerprint_udf(
-            cfg.shingle_k,
-            cfg.minhash_perms,
-            cfg.lsh_bands,
-            cfg.hash_seed,
-            window_tokens=cfg.window_tokens,
-            window_stride=cfg.window_stride,
-        )
-
     # stage 1: normalize ONCE and persist the working set — reps,
     # members, lineage, and the metrics aggregation all derive from this
-    # single pass.  Only the columns downstream stages read are kept:
-    # html and the raw text stay behind in the source scan (column-
-    # pruned away here; the output join re-reads text from the source).
-    # Measured trade-offs on this corpus shape: re-scanning the source
-    # per consumer costs more than this one materialization (the parquet
-    # decode + normalize regex dominate, and they scale with cores),
-    # while a metadata-only checkpoint + broadcast text re-fetch was
-    # NET SLOWER because of the second full scan (see BENCH notes).
-    in_cols = [c for c in ("url", "warc_ts", "text", "lang") if c in pages.columns]
-    keep = ["url", "warc_ts", *(["lang"] if "lang" in in_cols else []), "text_sha", "text_norm", "text_len"]
-    pages_norm = ckpt.materialize(
-        "s1_norm", lambda: with_norm(pages.select(*in_cols)).select(*keep)
-    )
+    # single pass.  Measured trade-offs on this corpus shape: re-scanning
+    # the source per consumer costs more than this one materialization
+    # (the parquet decode + normalize regex dominate, and they scale
+    # with cores), while a metadata-only checkpoint + broadcast text
+    # re-fetch was NET SLOWER because of the second full scan (see
+    # BENCH notes).
+    pages_norm = ckpt.materialize("s1_norm", lambda: normalized_pages(pages))
 
     # stage 2: exact collapse (one hash-agg exchange, map-side partial
     # agg; the shuffle carries one text_norm per distinct sha per map
@@ -119,71 +172,18 @@ def run_dedup_pipeline(
     reps, members = exact_collapse(pages_norm, cfg.merge)
     reps = ckpt.materialize("s2_exact_reps", lambda: reps)
 
-    # stage 3: fingerprints.  'numpy' mode: the pandas UDF (the only
-    # Python in the pipeline).  'sql' mode: pure Column expressions
-    # bit-reproducible in the DuckDB oracle (functions/sqlfp.py).
-    fp_cols = ["url", "freq", "simhash", "mh_bands", "mh_sig"]
-    if cfg.window_tokens:
-        fp_cols.append("win_hashes")
-
-    def build_fp() -> DataFrame:
-        if cfg.fingerprint == "sql":
-            from umi_collapse_rs_spark.functions.sqlfp import with_sql_fingerprints
-
-            return with_sql_fingerprints(
-                reps, "text_norm", cfg.shingle_k, cfg.lsh_bands
-            ).select(*fp_cols)
-        # re-spread rows before the UDF: the exact-collapse output is
-        # partitioned by text_sha ranges whose byte sizes can skew; a
-        # straggler Arrow batch would serialize the whole stage
-        return reps.repartition(cfg.shuffle_partitions, "url").select(
-            "url", "freq", "text_norm", fp_udf("text_norm").alias("_fp")
-        ).select("url", "freq", *[F.col(f"_fp.{c}").alias(c) for c in fp_cols[2:]])
-
-    fp = ckpt.materialize("s3_fingerprints", build_fp)
-
-    # stage 4: candidate pairs (simhash banding + minhash LSH + windows),
-    # unioned + dedup'd + dist-annotated, MATERIALIZED before the verify
-    # branches — verify splits into a passthrough branch and a
-    # signature-join branch, and without a cut here Catalyst executes
-    # the whole candidate DAG once per branch (measured 2x stage cost).
-    # The sim+mh expansions ride ONE kind-tagged exchange + WindowExec
-    # (combined_band_pairs) and the Hamming gate runs on the union
-    # stage's single fingerprint join (combined_candidates_with_dist).
-    def build_candidates() -> DataFrame:
-        sources = [
-            combined_band_pairs(
-                fp, cfg.simhash_bands, cfg.bucket_pair_cap, cfg.chain_width
-            )
-        ]
-        if cfg.window_tokens:
-            sources.append(
-                window_overlap_pairs(
-                    fp, cfg.min_shared_windows, cfg.bucket_pair_cap, cfg.chain_width
-                ).select("src", "dst", "source")
-            )
-        return combined_candidates_with_dist(sources, fp, cfg.hamming_k)
-
-    candidates = ckpt.materialize("s4_candidates", build_candidates)
+    fp = ckpt.materialize("s3_fingerprints", lambda: fingerprints(reps, cfg))
+    # stage 4 is cut (materialized) before the verify branches
+    cands = ckpt.materialize("s4_candidates", lambda: candidates(fp, cfg))
 
     # stage 5: verify (simhash/window passthrough; LSH-only pairs get
     # the MinHash-signature check)
     pairs = ckpt.materialize(
-        "s5_verified_pairs", lambda: verify_pairs(candidates, fp, cfg.jaccard_threshold)
+        "s5_verified_pairs", lambda: verify_pairs(cands, fp, cfg.jaccard_threshold)
     )
 
-    # stage 6: clustering — ONLY over nodes that appear in a verified
-    # pair.  Unique pages (the large majority of a real crawl) never
-    # enter the iterative loop; they become singleton clusters in
-    # stage 7 through the existing left-join + coalesce.  At 10^12 docs
-    # this is the difference between ~10 TB and ~160 TB of label
-    # shuffle per round (SCALE.md).
-    pair_nodes = (
-        pairs.select(F.col("src").alias("url"))
-        .unionByName(pairs.select(F.col("dst").alias("url")))
-        .dropDuplicates(["url"])
-    )
-    nodes = fp.select("url", "freq").join(pair_nodes, "url", "left_semi")
+    # stage 6: clustering over the verified-pair node set only
+    nodes = pair_nodes(pairs, fp)
     t0 = time.monotonic()
     if cfg.algo == "dir":
         gated = directional_edges(pairs, fp, cfg.directional_p)
