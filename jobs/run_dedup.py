@@ -56,7 +56,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--jaccard-threshold", type=float, default=0.5)
     ap.add_argument("--checkpoint-dir", default=None, help="stage-checkpoint root (resumable)")
     ap.add_argument("--master", default=None, help="override spark master (default: env/local[*])")
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument("--shuffle-partitions", type=int, default=None,
+                    help="spark.sql.shuffle.partitions, also the fingerprint UDF stage's task "
+                         "count (default: SPARK_GRAFT_CPUS, else 32)")
     ap.add_argument(
         "--warmup",
         action="store_true",
@@ -79,11 +81,6 @@ def main(argv: list[str] | None = None) -> int:
         lsh_bands=args.lsh_bands,
         jaccard_threshold=args.jaccard_threshold,
         checkpoint_dir=args.checkpoint_dir,
-        **(
-            {"shuffle_partitions": args.shuffle_partitions}
-            if args.shuffle_partitions
-            else {}
-        ),
     )
     spark = get_spark(master=args.master, shuffle_partitions=args.shuffle_partitions)
     if args.fixture is not None:

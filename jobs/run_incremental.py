@@ -58,7 +58,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--compact-segments", type=int, default=16,
                     help="auto-compact when the manifest carries >= N delta segments; 0 = never")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument("--shuffle-partitions", type=int, default=None,
+                    help="spark.sql.shuffle.partitions, also the fingerprint UDF stage's task "
+                         "count (default: SPARK_GRAFT_CPUS, else 32)")
     args = ap.parse_args(argv)
     if args.input and not args.output:
         ap.error("--output is required with --input")
@@ -72,7 +74,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = DedupConfig(
         merge=args.merge,
         window_tokens=0,
-        **({"shuffle_partitions": args.shuffle_partitions} if args.shuffle_partitions else {}),
     )
     spark = get_spark(master=args.master, shuffle_partitions=args.shuffle_partitions)
     t0 = time.monotonic()

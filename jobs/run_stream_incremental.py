@@ -61,7 +61,9 @@ def main(argv: list[str] | None = None) -> int:
                          "content matches no committed batch (verify the input is "
                          "genuinely new first — this disables the fail-fast guard)")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument("--shuffle-partitions", type=int, default=None,
+                    help="spark.sql.shuffle.partitions, also the fingerprint UDF stage's task "
+                         "count (default: SPARK_GRAFT_CPUS, else 32)")
     args = ap.parse_args(argv)
 
     from umi_collapse_rs_spark.config import DedupConfig
@@ -73,7 +75,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = DedupConfig(
         merge=args.merge,
         window_tokens=0,
-        **({"shuffle_partitions": args.shuffle_partitions} if args.shuffle_partitions else {}),
     )
     store = StateStore(spark, args.state)
     gc_removed = store.gc()  # drop dirs stranded by a killed writer

@@ -100,6 +100,18 @@ def test_no_resume_across_config_change(spark, ckpt_root):
     assert reps.count() > 0
 
 
+def test_output_config_token_is_pinned():
+    """Stage-checkpoint paths are keyed by the token, so a refactor of
+    DedupConfig's execution fields must not move it: these values were
+    recorded before the shuffle_partitions field was deleted."""
+    assert DedupConfig().output_config_token() == "395bcc942505"
+    assert DedupConfig(window_tokens=0).output_config_token() == "b6c55dc44d69"
+    assert (
+        DedupConfig(checkpoint_dir="/elsewhere").output_config_token()
+        == DedupConfig().output_config_token()
+    )
+
+
 def test_byte_identical_text_through_resume(spark, ckpt_root):
     """input_hint per-row invariant survives a resumed run: canonical
     pages carry text byte-identical to the source rows."""

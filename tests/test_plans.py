@@ -196,6 +196,29 @@ def test_ann_scoring_parallelism_is_pinned(spark):
     assert "_salt" in ivf_plan
 
 
+def test_fingerprint_stage_follows_session_shuffle_partitions(spark, fixture_500):
+    """The fingerprint UDF stage takes its task count from the session's
+    spark.sql.shuffle.partitions, like the ANN scoring stages, not from a
+    constant of its own (it was 32): each Python task pays a fixed
+    ~0.25 s of worker set-up, so small inputs want one task per core.
+    The explicit count keeps the exchange REPARTITION_BY_NUM, which AQE
+    may not coalesce.  Read from the plan; nothing runs."""
+    import re
+
+    from umi_collapse_rs_spark.config import DedupConfig
+    from umi_collapse_rs_spark.operators.exact import exact_collapse
+    from umi_collapse_rs_spark.plans.pipeline import fingerprints, normalized_pages
+
+    session_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert session_p != 32  # else the old constant would pass too
+    pages, _ = fixture_500
+    reps, _ = exact_collapse(normalized_pages(pages))
+    plan = _plan(fingerprints(reps, DedupConfig()))
+    assert "ArrowEvalPython" in plan
+    counts = re.findall(r"hashpartitioning\(url#\d+, (\d+)\), REPARTITION_BY_NUM", plan)
+    assert counts and {int(c) for c in counts} == {session_p}
+
+
 def test_semi_join_goes_broadcast_when_small(spark):
     sf = "/root/testdata/sf0.001"
     big = spark.read.parquet(f"{sf}/lineitem.parquet")

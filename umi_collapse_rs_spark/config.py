@@ -61,7 +61,6 @@ class DedupConfig:
     chain_width: int = 4        # each member pairs with the next `chain_width` in sorted order
 
     # --- execution ---
-    shuffle_partitions: int = 32
     checkpoint_dir: str | None = None   # stage-checkpoint root (resumability)
 
     def output_config_token(self) -> str:
@@ -70,13 +69,12 @@ class DedupConfig:
         Keys the stage-checkpoint directory so a rerun with a different
         merge rule / fingerprint mode / banding config can never resume
         stage outputs computed under the old config (it resolves to a
-        different path and recomputes).  Pure execution knobs
-        (shuffle_partitions, checkpoint_dir) are excluded — they change
-        the physical plan, not the result.
+        different path and recomputes).  ``checkpoint_dir`` is excluded:
+        it says where the outputs go, not what they are.
         """
         import hashlib
 
-        skip = {"shuffle_partitions", "checkpoint_dir"}
+        skip = {"checkpoint_dir"}
         parts = [
             f"{name}={getattr(self, name)!r}"
             for name in sorted(self.__dataclass_fields__)

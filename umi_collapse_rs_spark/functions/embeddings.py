@@ -39,6 +39,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from umi_collapse_rs_spark.session import session_shuffle_partitions
+
 EMBEDDING_DIM = 64  # /root/testdata embeddings.parquet dimension
 
 
@@ -169,15 +171,6 @@ def cosine_sim_col(a, b, dim: int = EMBEDDING_DIM):
     return dot_col(a, b, dim) / (norm_col(a, dim) * norm_col(b, dim))
 
 
-def _shuffle_partitions(df: DataFrame) -> int:
-    """Session shuffle-partition setting (driver-side conf read, not an
-    action)."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001
-        return 32
-
-
 def _salt_count(n_keys: int, spark_p: int) -> int:
     """How many salts the candidate join needs: the probe joins below
     are tiny in BYTES but huge in compute (each matched row expands
@@ -293,7 +286,7 @@ def hyperplane_lsh_topk(
             raise ValueError("pass n_planes explicitly or n_rows for auto-scaling")
         n_planes = auto_n_planes(n_rows, bucket_cap)
     planes = lsh_planes(n_planes, dim, seed)
-    spark_p = _shuffle_partitions(df)
+    spark_p = session_shuffle_partitions(df.sparkSession)
     sig = _spread_input(df, spark_p, id_col).select(
         F.col(id_col), F.col(emb_col),
         hyperplane_signature_col(F.col(emb_col), planes).alias("bucket"),
@@ -347,7 +340,7 @@ def lsh_blocked_near_dup_pairs(
     plan).  The blocking is part of the operator's contract; the
     DuckDB oracle applies the identical predicate."""
     planes = lsh_planes(n_planes, dim, seed)
-    spark_p = _shuffle_partitions(df)
+    spark_p = session_shuffle_partitions(df.sparkSession)
     sig = _spread_input(df, spark_p, id_col).select(
         F.col(id_col), F.col(emb_col),
         hyperplane_signature_col(F.col(emb_col), planes).alias("bucket"),
@@ -453,7 +446,7 @@ def multitable_lsh_topk(
         if n_tables is None:
             n_tables = auto_n_tables(n_rows, bucket_cap, probe_hamming=probe_hamming)
     planes = lsh_planes(n_tables * n_planes, dim, seed)
-    spark_p = _shuffle_partitions(df)
+    spark_p = session_shuffle_partitions(df.sparkSession)
     tb = F.array(
         *[
             F.struct(
@@ -655,7 +648,7 @@ def ivf_topk(
             for j, c in enumerate(cents)
         ]
     )
-    spark_p = _shuffle_partitions(df)
+    spark_p = session_shuffle_partitions(df.sparkSession)
     ranked = (
         _spread_input(df, spark_p, id_col).select(
             F.col(id_col), F.col(emb_col),

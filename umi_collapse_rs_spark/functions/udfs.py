@@ -17,8 +17,15 @@ text, as required by the per-row invariant in BASELINE.json input_hint.
 Scale note: each UDF call processes one Arrow batch (500 rows, see
 session.py); the per-batch work is C-vectorized (see fingerprint_core),
 so throughput is bounded by Arrow transfer + numpy, not the Python
-interpreter.  At 100 TB
-these run embarrassingly parallel across executors with no shuffle.
+interpreter.  What does cost is the Python *task*: each pays a fixed
+~0.25 s of worker set-up whatever its row count, because
+``pyspark.worker_util.setup_spark_files`` calls
+``importlib.invalidate_caches()``, which makes every zipimporter of
+pyspark.zip re-read its archive directory.  The stage's task count is
+the session's shuffle partitions (plans/pipeline.fingerprints): one
+per core (SPARK_GRAFT_CPUS) where inputs are small enough for that
+set-up to outweigh a task's rows, more than cores for large inputs so
+one long-text task cannot hold up the stage.
 """
 
 from __future__ import annotations

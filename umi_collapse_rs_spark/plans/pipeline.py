@@ -49,6 +49,7 @@ from umi_collapse_rs_spark.operators.edges import (
 )
 from umi_collapse_rs_spark.operators.exact import exact_collapse, with_norm
 from umi_collapse_rs_spark.plans.checkpoint import StageCheckpointer
+from umi_collapse_rs_spark.session import session_shuffle_partitions
 
 
 @dataclass
@@ -94,8 +95,15 @@ def fingerprints(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     # re-spread rows before the UDF: the exact-collapse output is
     # partitioned by text_sha ranges whose byte sizes can skew; a
-    # straggler Arrow batch would serialize the whole stage
-    return reps.repartition(cfg.shuffle_partitions, "url").select(
+    # straggler Arrow batch would serialize the whole stage.  The count
+    # is the session's shuffle partitions, as in every pinned compute
+    # stage: SPARK_GRAFT_CPUS makes it one task per core, which suits
+    # small inputs, where each Python task's fixed ~0.25 s of set-up
+    # (functions/udfs.py "Scale note") outweighs its rows; large inputs
+    # pass --shuffle-partitions.  An explicit count keeps the exchange
+    # REPARTITION_BY_NUM, which AQE never coalesces.
+    n_tasks = session_shuffle_partitions(reps.sparkSession)
+    return reps.repartition(n_tasks, "url").select(
         "url", "freq", fp_udf("text_norm").alias("_fp")
     ).select("url", "freq", *[F.col(f"_fp.{c}").alias(c) for c in fp_cols[2:]])
 

@@ -58,7 +58,8 @@ def get_spark(
         # kernel time; 500-row batches -> 0.6 s first call + 0.08 s
         # warm calls, 5x faster stage wall).  Compute per batch is
         # C-vectorized either way; 500 rows (~1 MB text) keeps numpy
-        # efficiency while amortizing the warmup across calls.
+        # efficiency while amortizing the warmup across calls.  The fixed
+        # per-TASK cost is separate: functions/udfs.py "Scale note".
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
         # local mode: the driver heap is ALL executor memory.  Measured on
         # this box (150k-page run, local[32]): heap 64g -> 12.6 min sys
@@ -86,3 +87,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` (a driver-side conf
+    read, not an action).  Every compute-bound exchange pinned with an
+    explicit count (the fingerprint UDF, the ANN scoring joins) takes
+    its task count from here, so one setting sizes them all."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:  # noqa: BLE001
+        return 32
