@@ -66,7 +66,6 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--output is required with --input")
 
     from umi_collapse_rs_spark.config import DedupConfig
-    from umi_collapse_rs_spark.plans.incremental import incremental_assign
     from umi_collapse_rs_spark.plans.state_store import StateStore
     from umi_collapse_rs_spark.session import get_spark
 
@@ -103,21 +102,18 @@ def main(argv: list[str] | None = None) -> int:
             "wall_sec": round(time.monotonic() - t0, 2),
         }
     else:
+        from umi_collapse_rs_spark.streaming.incremental import absorb_batch
+
         # startup recovery: a killed previous run may have stranded an
         # uncommitted segment/base or a manifest .tmp — unreferenced by
         # the current manifest, safe to drop
         gc_removed = store.gc()
-        state = store.read()
-        batch = spark.read.parquet(args.input)
-        res = incremental_assign(
-            spark, state, batch, cfg,
+        m, compacted = absorb_batch(
+            spark, store, spark.read.parquet(args.input), cfg,
+            f"{args.output}/assignments",
             index_bucket_cap=args.index_bucket_cap or None,
+            compact_segments=args.compact_segments,
         )
-        res.assignments.write.mode("overwrite").parquet(f"{args.output}/assignments")
-        m = store.commit_delta(res.delta)
-        compacted = None
-        if args.compact_segments and len(m["segments"]) >= args.compact_segments:
-            compacted = store.compact(gc=True)
         a = spark.read.parquet(f"{args.output}/assignments")
         vias = {r["via"]: r["count"] for r in a.groupBy("via").count().collect()}
         wall = time.monotonic() - t0

@@ -198,17 +198,6 @@ def test_compact_preserves_state_and_empties_log(st):
     assert not [d for d in store._listdir(store.root) if d.startswith("seg-")]
 
 
-def test_legacy_flat_layout_read(spark, st, tmp_path):
-    """Pre-store flat dirs (<root>/sha_index + <root>/canonicals) stay
-    readable — migration is 'bootstrap once from the legacy read'."""
-    root = str(tmp_path / "legacy")
-    st["state"].sha_index.write.parquet(f"{root}/sha_index")
-    st["state"].canonicals.write.parquet(f"{root}/canonicals")
-    store = StateStore(spark, root)
-    assert store.exists() and store.manifest() is None
-    _assert_states_equal(store.read(), st["state"])
-
-
 def test_read_before_bootstrap_raises(spark, tmp_path):
     store = StateStore(spark, str(tmp_path / "nope"))
     assert not store.exists()
@@ -244,6 +233,20 @@ def test_rebootstrap_resets_stream_lineage(spark, st, tmp_path):
     _assert_states_equal(store.read(), st["state"])
 
 
+def test_sink_skips_empty_micro_batch(spark, st, tmp_path):
+    """A trigger with no new files hands the sink an empty micro-batch:
+    the batch fingerprint's row count (0) stops it before any assign,
+    write or commit."""
+    from umi_collapse_rs_spark.streaming.incremental import incremental_sink
+
+    store = st["store"]
+    before = store.manifest()
+    out = tmp_path / "out"
+    incremental_sink(spark, st["root"], str(out), CFG)(st["new"].limit(0), 0)
+    assert store.manifest() == before
+    assert not out.exists()
+
+
 def test_commit_delta_new_lineage_rebases_high_water_mark(spark, st, tmp_path):
     """A commit from a DIFFERENT stream_id is NOT skipped by the old
     lineage's high-water mark (ids restart at 0 in a new lineage); the
@@ -263,26 +266,25 @@ def test_commit_delta_new_lineage_rebases_high_water_mark(spark, st, tmp_path):
     assert m["batch_fps"] == {"1:a": 7, "1:b": 0}
 
 
-def test_prefix_pruned_probe_matches_unpruned(spark, st, tmp_path):
+def test_prefix_pruned_probe_matches_unpruned(spark, st):
     """The prefix-pruned exact probe (r4 verdict item #1: make the
     state READ sub-corpus) is a pure optimization: assignments against
-    a prefix-partitioned store equal those against a flat store, and
-    pruning actually engaged (probe_prefixes collected, bounded by the
-    prefix space)."""
+    the prefix-partitioned store equal those against the in-memory
+    state it was bootstrapped from (no ``sha_pfx``, so its probe is
+    unpruned), and pruning actually engaged (probe_prefixes collected,
+    bounded by the prefix space)."""
     import pandas as pd
 
-    flat = StateStore(spark, str(tmp_path / "flat"), sha_prefix_len=0)
-    flat.bootstrap(st["state"])
-    flat_state = flat.read()
-    assert flat_state.sha_pfx_len is None
-    inc_flat = incremental_assign(spark, flat_state, st["new"], CFG)
-    assert inc_flat.probe_prefixes is None
+    assert st["state"].sha_pfx_len is None
+    inc_mem = incremental_assign(spark, st["state"], st["new"], CFG)
+    assert inc_mem.probe_prefixes is None
     a = st["assign"].sort_values("url").reset_index(drop=True)
-    b = inc_flat.assignments.toPandas().sort_values("url").reset_index(drop=True)
+    b = inc_mem.assignments.toPandas().sort_values("url").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+    pfx_len = st["bootstrap_manifest"]["sha_pfx_len"]
     prefixes = st["inc"].probe_prefixes
-    assert prefixes and len(prefixes) <= 16 ** st["store"].sha_prefix_len
-    assert all(len(p) == st["store"].sha_prefix_len for p in prefixes)
+    assert prefixes and len(prefixes) <= 16 ** pfx_len
+    assert all(len(p) == pfx_len for p in prefixes)
 
 
 def test_prefix_pruning_reaches_the_scan(spark, st):
@@ -305,7 +307,7 @@ def test_prefix_pruning_reaches_the_scan(spark, st):
 def test_sha_read_bytes_tracks_prefix_count(st):
     """The evidence metric (BENCH/INCREMENTAL.md read table): bytes
     attributed to a 2-prefix probe are a strict fraction of the full
-    index; None (or a flat store) reports the full index."""
+    index; None reports the full index."""
     store = st["store"]
     full = store.sha_read_bytes(None)
     pruned = store.sha_read_bytes(["00", "01"])

@@ -282,7 +282,7 @@ def main() -> int:
             for s in read_sweep
         )
         corpus_n = result["corpus_pages"]
-        pfx_len = store.manifest().get("sha_pfx_len") or store.sha_prefix_len
+        pfx_len = store.manifest()["sha_pfx_len"]
         report_path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             "BENCH",

@@ -154,32 +154,6 @@ def band_mix_col(h: Column, r: int, a: int, b: int, c: int) -> Column:
     return (F.lit(a) * hi + F.lit(b) * lo + F.lit(c)).bitwiseAND(F.lit(_BAND_MASK))
 
 
-def _simhash_from_bitsums(n: Column, bitsum) -> Column:
-    """Assemble the majority-vote simhash from per-bit popcount sums
-    (``bitsum(j)`` = number of shingle hashes with bit j set)."""
-    terms = [
-        F.when(bitsum(j) * 2 >= n, F.lit(1 << j)).otherwise(F.lit(0))
-        for j in range(SIMHASH_BITS)
-    ]
-    return reduce(add, terms).cast("long")
-
-
-def simhash_col(shingle_hashes: Column) -> Column:
-    """Majority-vote SimHash over an array<long> of 60-bit hashes
-    (per-row array form — small inputs / unit tests; the bulk path is
-    the relational aggregate in :func:`with_sql_fingerprints`)."""
-    nsh = F.size(shingle_hashes)
-    return _simhash_from_bitsums(
-        nsh,
-        lambda j: F.size(
-            F.filter(
-                shingle_hashes,
-                lambda h: F.shiftright(h, j).bitwiseAND(F.lit(1)) == F.lit(1),
-            )
-        ),
-    )
-
-
 def with_sql_fingerprints(
     df: DataFrame, text_col: str, k: int, n_bands: int, id_col: str = "url"
 ) -> DataFrame:
@@ -209,9 +183,17 @@ def with_sql_fingerprints(
         for b in range(n_bands)
     ]
     agg = hashed.groupBy("_fid").agg(*aggs)
+    # majority vote: bit j is set when at least half the hashes set it
+    simhash = reduce(
+        add,
+        [
+            F.when(F.col(f"_b{j}") * 2 >= F.col("_n"), F.lit(1 << j)).otherwise(F.lit(0))
+            for j in range(SIMHASH_BITS)
+        ],
+    ).cast("long")
     fp = agg.select(
         "_fid",
-        _simhash_from_bitsums(F.col("_n"), lambda j: F.col(f"_b{j}")).alias("simhash"),
+        simhash.alias("simhash"),
         F.array(*[F.col(f"_m{b}") for b in range(n_bands)]).alias("mh_bands"),
     )
     return (

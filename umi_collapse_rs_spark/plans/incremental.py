@@ -81,10 +81,10 @@ class DedupState:
 
     sha_index: DataFrame   # (text_sha, canonical_url) — one row per distinct corpus text
     canonicals: DataFrame  # (url, freq, simhash, mh_bands, mh_sig) — one row per cluster
-    # When the index is prefix-partitioned on disk (StateStore bases),
-    # sha_index additionally carries a string ``sha_pfx`` column (the
-    # first ``sha_pfx_len`` hex chars of text_sha) and the probe prunes
-    # its scan to the batch's own prefixes — see incremental_assign.
+    # Set on states read from a StateStore: sha_index then also carries
+    # a string ``sha_pfx`` column (the first ``sha_pfx_len`` hex chars of
+    # text_sha) and the probe prunes its scan to the batch's own
+    # prefixes — see incremental_assign.  None for in-memory states.
     sha_pfx_len: int | None = None
 
 
@@ -107,8 +107,8 @@ class IncrementalResult:
     assignments: DataFrame  # (url, canonical_url, via) — one row per NEW page
     state_out: DedupState   # input state + absorbed mass + new clusters (in-memory fold of delta)
     delta: StateDelta       # the O(batch) persistable change (state_out = fold(state_in, delta))
-    # the batch's distinct sha prefixes when the index is prefix-
-    # partitioned (None otherwise) — what the exact probe's index scan
+    # the batch's distinct sha prefixes when the state came from a
+    # StateStore (None otherwise) — what the exact probe's index scan
     # was pruned to; feed to StateStore.sha_read_bytes for evidence
     probe_prefixes: list[str] | None = None
 
@@ -163,9 +163,9 @@ def incremental_assign(
     reps_n = reps_n.localCheckpoint(eager=False)
 
     # --- step 1: exact sha probe -----------------------------------
-    # When the index base is prefix-partitioned (StateStore), prune its
-    # scan to the batch's own prefixes: a batch sha can only match an
-    # index row sharing its prefix, for the join AND the anti-join.
+    # A StateStore state's index is prefix-partitioned: prune its scan
+    # to the batch's own prefixes (a batch sha can only match an index
+    # row sharing its prefix, for the join AND the anti-join).
     # The collect is bounded metadata — at most 16^pfx_len short
     # strings (256 at the default), never rows — the same driver-side
     # footprint as an AQE statistic.  Index bytes read become
@@ -175,7 +175,7 @@ def incremental_assign(
     # floor; SCALE.md has the 10^12-doc partition-count math).
     sha_idx = state.sha_index
     probe_prefixes: list[str] | None = None
-    if state.sha_pfx_len and "sha_pfx" in sha_idx.columns:
+    if state.sha_pfx_len:
         probe_prefixes = sorted(
             r[0]
             for r in reps_n.select(
@@ -194,7 +194,9 @@ def incremental_assign(
     rest = reps_n.join(sha_idx.select("text_sha"), "text_sha", "left_anti")
 
     # --- step 2: banded near probe against canonicals ---------------
-    fp_n = fingerprints(rest, cfg).localCheckpoint(eager=False)
+    # eager: the probe's two concurrent broadcast stages over fp_n would
+    # each run the fingerprint UDF before a lazy cut exists
+    fp_n = fingerprints(rest, cfg).localCheckpoint(eager=True)
     cand = cross_banded_pairs(
         fp_n, state.canonicals, cfg.simhash_bands, index_bucket_cap
     )
@@ -307,7 +309,7 @@ def incremental_assign(
         .select("text_sha", "canonical_url")
     )
     sha_new_folded = sha_new
-    if "sha_pfx" in state.sha_index.columns and state.sha_pfx_len:
+    if state.sha_pfx_len:
         # keep the in-memory fold union-compatible with the prefix-
         # partitioned index (the persisted delta stays two-column;
         # StateStore.read re-derives the prefix for segments)

@@ -9,7 +9,7 @@ O(batch).  This store makes the persistence match the plan:
 
     <root>/
       manifest/v00000007.json   <- THE commit: {"base": ..., "segments": [...]}
-      base-g00000001/sha_index/      parquet (text_sha, canonical_url)
+      base-g00000001/sha_index/sha_pfx=3f/  parquet (text_sha, canonical_url)
       base-g00000001/canonicals/     parquet (url, freq, simhash, mh_bands, mh_sig)
       seg-00000005/sha_new/          parquet — new shas      (disjoint appends)
       seg-00000005/freq_delta/       parquet (url, added)    (grown canonical freqs)
@@ -31,6 +31,15 @@ manifest — so a kill between ANY two steps leaves the previous manifest
 current and the half-written dirs unreferenced.  Readers take the
 highest manifest version; :meth:`gc` (safe at startup) removes
 unreferenced dirs and stale ``.tmp`` files.
+
+The base sha index — the one O(corpus)-rows table — is partitioned on
+the first :data:`SHA_PREFIX_LEN` hex chars of ``text_sha`` (16^n
+``sha_pfx=`` dirs), so the per-batch exact probe prunes its scan to
+the prefixes the batch touches (plans/incremental.py): a B-key batch
+over P partitions reads a 1 - e^(-B/P) fraction of the index
+(BENCH/INCREMENTAL.md; at 10^12 docs P must grow with the corpus,
+SCALE.md).  Bootstrap records the length in the manifest as
+``sha_pfx_len``, which readers and compaction use.
 
 Reads fold the log: ``sha_index = base ∪ all sha_new``;
 ``canonicals = (base ∪ all canon_new) left-join Σ freq_delta``.  The
@@ -56,41 +65,45 @@ from __future__ import annotations
 
 import json
 import uuid
-from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from umi_collapse_rs_spark.plans.incremental import DedupState, StateDelta
 
 _CANON_COLS = ["url", "freq", "simhash", "mh_bands", "mh_sig"]
 
+# hex chars of text_sha that key the base sha-index partitions (16^n
+# dirs); written into each bootstrap's manifest as ``sha_pfx_len``
+SHA_PREFIX_LEN = 2
+
+# lineage_gate verdicts
+REPLAY, OTHER_LINEAGE, NEW = "replay", "other_lineage", "new"
+
+
+def read_json(spark: SparkSession, path: str) -> dict | None:
+    """The JSON file at ``path`` on any Hadoop filesystem, or None."""
+    # commons-io ships with Spark; py4j can't read into a Python
+    # bytearray (server-side mutations don't propagate back)
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(txt)
+
 
 class StateStore:
     """Versioned parquet state under ``root`` (see module docstring)."""
 
-    def __init__(self, spark: SparkSession, root: str, sha_prefix_len: int = 2):
-        """``sha_prefix_len``: hex chars of text_sha used as the base
-        sha-index partition key (16^n dirs).  Applied at bootstrap time
-        and recorded in the manifest — readers and compaction use the
-        manifest's value, so the constructor arg only matters for
-        :meth:`bootstrap`.  0 disables partitioning.
-
-        Why: the per-batch exact probe is a join against the sha index
-        — the one O(corpus)-rows table.  Partitioning the base by sha
-        prefix lets the probe prune to the partitions the batch's own
-        prefixes touch (plans/incremental.py collects the batch's
-        ≤ 16^n distinct prefixes — bounded driver metadata, never rows
-        — and pushes an isin partition filter into the scan).  Expected
-        touched fraction for a B-key batch over P partitions is
-        1 - e^(-B/P): reads track batch mass while B << P and floor at
-        the full index when the batch saturates the prefix space — at
-        10^12 docs P scales with the corpus (larger prefix / Iceberg
-        bucket count), keeping per-batch index reads ≈ B × (bytes per
-        partition), not O(corpus).  Measured in BENCH/INCREMENTAL.md."""
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self.sha_prefix_len = sha_prefix_len
         jvm = spark._jvm
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._fs = self._Path(self.root).getFileSystem(
@@ -126,18 +139,6 @@ class StateStore:
                 "the store is single-writer by contract"
             )
 
-    def _read_json(self, path: str) -> dict:
-        # commons-io ships with Spark; py4j can't read into a Python
-        # bytearray (server-side mutations don't propagate back)
-        stream = self._fs.open(self._Path(path))
-        try:
-            txt = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        return json.loads(txt)
-
     # -- manifest ------------------------------------------------------
 
     def manifest(self) -> dict | None:
@@ -149,16 +150,18 @@ class StateStore:
         )
         if not versions:
             return None
-        return self._read_json(f"{self.root}/manifest/{versions[-1]}")
+        return read_json(self.spark, f"{self.root}/manifest/{versions[-1]}")
 
     def exists(self) -> bool:
-        return self.manifest() is not None or self._is_legacy()
+        return self.manifest() is not None
 
-    def _is_legacy(self) -> bool:
-        """Pre-store flat layout (<root>/sha_index + <root>/canonicals)."""
-        return self._exists(f"{self.root}/sha_index") and self._exists(
-            f"{self.root}/canonicals"
-        )
+    def _committed(self) -> dict:
+        m = self.manifest()
+        if m is None:
+            raise RuntimeError(
+                f"no committed state under {self.root} (used before bootstrap)"
+            )
+        return m
 
     def _commit_manifest(
         self,
@@ -167,24 +170,24 @@ class StateStore:
         batch_id: int | None = None,
         stream_id: str | None = None,
         batch_fp: str | None = None,
-        carry_stream: bool = True,
-        sha_pfx_len: int | None = None,
+        bootstrap: bool = False,
     ) -> dict:
         prev = self.manifest()
         version = (prev["version"] + 1) if prev else 1
-        m = {"version": version, "base": base, "segments": segments}
-        if sha_pfx_len is not None:
-            # structural layout key, set at bootstrap/compact
-            m["sha_pfx_len"] = sha_pfx_len
-        elif prev is not None and "sha_pfx_len" in prev:
-            m["sha_pfx_len"] = prev["sha_pfx_len"]
-        if carry_stream and prev is not None:
+        m = {
+            "version": version,
+            "base": base,
+            "segments": segments,
+            # layout key: set by bootstrap, carried by every later commit
+            "sha_pfx_len": SHA_PREFIX_LEN if bootstrap else prev["sha_pfx_len"],
+        }
+        if not bootstrap:
             # carry the stream lineage (high-water mark, query id,
             # content fingerprints) through commits that don't advance
-            # it (compaction).  bootstrap() passes carry_stream=False:
-            # re-bootstrapping a root starts a fresh lineage and must
-            # NOT retain a stale mark that would suppress the first
-            # hwm+1 micro-batches of a subsequent stream.
+            # it (compaction).  Not through bootstrap(): re-bootstrapping
+            # a root starts a fresh lineage and must NOT retain a stale
+            # mark that would suppress the first hwm+1 micro-batches of
+            # a subsequent stream.
             for k in ("batch_id", "stream_id", "batch_fps"):
                 if k in prev:
                     m[k] = prev[k]
@@ -220,6 +223,23 @@ class StateStore:
             return None
         return m.get("batch_id")
 
+    @staticmethod
+    def lineage_gate(m: dict, batch_id: int | None, stream_id: str | None) -> str:
+        """Replay verdict for micro-batch ``batch_id`` of query
+        ``stream_id`` against manifest ``m``.  Ids are monotone only
+        within one query id (a fresh checkpoint restarts them at 0);
+        lineages match when the ids are equal or either is None.
+        ``REPLAY``: same lineage, id at or below the high-water mark.
+        ``OTHER_LINEAGE``: streaming history from another query id, so
+        the id proves nothing (the sink decides by content).  ``NEW``:
+        anything else."""
+        hwm, prev_sid = m.get("batch_id"), m.get("stream_id")
+        if batch_id is None or hwm is None:
+            return NEW
+        if stream_id is not None and prev_sid is not None and stream_id != prev_sid:
+            return OTHER_LINEAGE
+        return REPLAY if batch_id <= hwm else NEW
+
     # -- write paths ---------------------------------------------------
 
     def bootstrap(self, state: DedupState) -> dict:
@@ -232,26 +252,22 @@ class StateStore:
         prev = self.manifest()
         gen = (int(prev["base"].split("-g")[1]) + 1) if prev else 1
         base = f"base-g{gen:08d}"
-        self._write_base(state, base, self.sha_prefix_len)
-        m = self._commit_manifest(
-            base, [], carry_stream=False, sha_pfx_len=self.sha_prefix_len
-        )
+        self._write_base(state, base, SHA_PREFIX_LEN)
+        m = self._commit_manifest(base, [], bootstrap=True)
         m["bytes_written"] = self._du(f"{self.root}/{base}")
         return m
 
     def _write_base(self, state: DedupState, base: str, pfx_len: int) -> None:
-        sha = state.sha_index.select("text_sha", "canonical_url")
-        if pfx_len:
-            # one output file per prefix dir: repartition on the key so
-            # each task owns whole partitions (no small-file fan-out)
-            sha = sha.withColumn(
-                "sha_pfx", F.substring("text_sha", 1, pfx_len)
-            ).repartition("sha_pfx")
-            sha.write.partitionBy("sha_pfx").mode("overwrite").parquet(
-                f"{self.root}/{base}/sha_index"
-            )
-        else:
-            sha.write.mode("overwrite").parquet(f"{self.root}/{base}/sha_index")
+        # one output file per prefix dir: repartition on the key so each
+        # task owns whole partitions (no small-file fan-out)
+        sha = (
+            state.sha_index.select("text_sha", "canonical_url")
+            .withColumn("sha_pfx", F.substring("text_sha", 1, pfx_len))
+            .repartition("sha_pfx")
+        )
+        sha.write.partitionBy("sha_pfx").mode("overwrite").parquet(
+            f"{self.root}/{base}/sha_index"
+        )
         state.canonicals.select(*_CANON_COLS).write.mode("overwrite").parquet(
             f"{self.root}/{base}/canonicals"
         )
@@ -280,33 +296,22 @@ class StateStore:
         manifest v{K+1}.  Total bytes written are O(batch) — returned as
         ``bytes_written`` for the bench evidence.
 
-        ``batch_id`` (streaming): the micro-batch id from foreachBatch.
-        Ids are monotone only WITHIN one checkpoint lineage (one
-        streaming query id) — a fresh checkpoint restarts them at 0.  So
-        a commit whose id is <= the manifest's high-water mark is
-        treated as a REPLAY (skipped, ``skipped_replay: True``) only
-        when the lineage matches: ``stream_id`` equals the recorded one,
-        or either side carries no id (direct callers / legacy
-        manifests).  A commit from a DIFFERENT stream_id re-bases the
-        lineage: the new id + mark are recorded even if numerically
-        lower.  Cross-lineage replay-vs-new resolution (content
-        fingerprints, fail-fast) happens in the sink BEFORE this call
-        (streaming/incremental.py) — this method trusts its caller.
+        ``batch_id`` / ``stream_id`` (streaming): the micro-batch id
+        from foreachBatch and its query id.  A commit that
+        :meth:`lineage_gate` calls a ``REPLAY`` is skipped
+        (``skipped_replay: True``).  A commit from a DIFFERENT stream_id
+        re-bases the lineage: the new id + mark are recorded even if
+        numerically lower.  Cross-lineage replay-vs-new resolution
+        (content fingerprints, fail-fast) happens in the sink BEFORE
+        this call (streaming/incremental.py) — this method trusts its
+        caller.
 
         ``batch_fp``: content fingerprint of the batch, recorded in the
         manifest so future lineages can recognize re-deliveries.
         """
-        prev = self.manifest()
-        if prev is None:
-            raise RuntimeError("commit_delta before bootstrap")
-        if batch_id is not None:
-            hwm = prev.get("batch_id")
-            prev_sid = prev.get("stream_id")
-            same_lineage = (
-                stream_id is None or prev_sid is None or stream_id == prev_sid
-            )
-            if same_lineage and hwm is not None and batch_id <= hwm:
-                return {**prev, "bytes_written": 0, "skipped_replay": True}
+        prev = self._committed()
+        if self.lineage_gate(prev, batch_id, stream_id) == REPLAY:
+            return {**prev, "bytes_written": 0, "skipped_replay": True}
         seg = f"seg-{prev['version'] + 1:08d}"
         self._write_segment(delta, seg)
         m = self._commit_manifest(
@@ -324,13 +329,11 @@ class StateStore:
         write, amortized over the batches since the last compaction),
         commit a segments=[] manifest, optionally GC the old dirs.  A
         kill at any point leaves the previous manifest readable."""
-        prev = self.manifest()
-        if prev is None:
-            raise RuntimeError("compact before bootstrap")
+        prev = self._committed()
         state = self.read()
         gen = int(prev["base"].split("-g")[1]) + 1
         base = f"base-g{gen:08d}"
-        self._write_base(state, base, prev.get("sha_pfx_len") or 0)
+        self._write_base(state, base, prev["sha_pfx_len"])
         m = self._commit_manifest(base, [])
         m["bytes_written"] = self._du(f"{self.root}/{base}")
         if gc:
@@ -368,34 +371,22 @@ class StateStore:
         aggregate-sized left join for the freq deltas.  A canonical born
         in segment i and grown in segment j > i resolves correctly —
         ``canon_new`` rows enter the union before the delta join."""
-        m = self.manifest()
-        if m is None:
-            if self._is_legacy():
-                return DedupState(
-                    sha_index=self.spark.read.parquet(f"{self.root}/sha_index"),
-                    canonicals=self.spark.read.parquet(f"{self.root}/canonicals"),
-                )
-            raise RuntimeError(f"no committed state under {self.root}")
-        pfx_len = m.get("sha_pfx_len") or 0
-        if pfx_len:
-            # explicit schema pins the partition column to string —
-            # inference would coerce digits-only prefixes like "07" to int
-            sha = self.spark.read.schema(
-                "text_sha string, canonical_url string, sha_pfx string"
-            ).parquet(f"{self.root}/{m['base']}/sha_index")
-        else:
-            sha = self.spark.read.parquet(f"{self.root}/{m['base']}/sha_index")
+        m = self._committed()
+        pfx_len = m["sha_pfx_len"]
+        # explicit schema pins the partition column to string —
+        # inference would coerce digits-only prefixes like "07" to int
+        sha = self.spark.read.schema(
+            "text_sha string, canonical_url string, sha_pfx string"
+        ).parquet(f"{self.root}/{m['base']}/sha_index")
         canon = self.spark.read.parquet(f"{self.root}/{m['base']}/canonicals")
         deltas = []
         for seg in m["segments"]:
-            seg_sha = self.spark.read.parquet(f"{self.root}/{seg}/sha_new")
-            if pfx_len:
-                # segments are O(batch) — derive the prefix instead of
-                # paying a partitioned write per commit; pruning applies
-                # to the corpus-sized base, a plain filter to segments
-                seg_sha = seg_sha.withColumn(
-                    "sha_pfx", F.substring("text_sha", 1, pfx_len)
-                )
+            # segments are O(batch) — derive the prefix instead of paying
+            # a partitioned write per commit; pruning applies to the
+            # corpus-sized base, a plain filter to segments
+            seg_sha = self.spark.read.parquet(
+                f"{self.root}/{seg}/sha_new"
+            ).withColumn("sha_pfx", F.substring("text_sha", 1, pfx_len))
             sha = sha.unionByName(seg_sha)
             canon = canon.unionByName(
                 self.spark.read.parquet(f"{self.root}/{seg}/canon_new")
@@ -413,9 +404,7 @@ class StateStore:
                 "mh_bands",
                 "mh_sig",
             )
-        return DedupState(
-            sha_index=sha, canonicals=canon, sha_pfx_len=pfx_len or None
-        )
+        return DedupState(sha_index=sha, canonicals=canon, sha_pfx_len=pfx_len)
 
     def sha_read_bytes(self, prefixes: list[str] | None) -> int:
         """On-disk bytes the exact probe's sha-index scan reads for a
@@ -423,13 +412,11 @@ class StateStore:
         as ``probe_prefixes``): the matching base partition dirs plus
         every committed segment's sha_new (segments are O(batch) each
         and unpartitioned — the floor compaction resets).  With
-        ``prefixes=None`` or an unpartitioned base: the full index.
-        Evidence metric for BENCH/INCREMENTAL.md's read table."""
-        m = self.manifest()
-        if m is None:
-            return self._du(f"{self.root}/sha_index")
+        ``prefixes=None``: the full index.  Evidence metric for
+        BENCH/INCREMENTAL.md's read table."""
+        m = self._committed()
         base_dir = f"{self.root}/{m['base']}/sha_index"
-        if prefixes is None or not m.get("sha_pfx_len"):
+        if prefixes is None:
             base_bytes = self._du(base_dir)
         else:
             base_bytes = sum(self._du(f"{base_dir}/sha_pfx={p}") for p in prefixes)
@@ -439,9 +426,7 @@ class StateStore:
 
     def total_bytes(self) -> int:
         """On-disk footprint of the live state (referenced dirs only)."""
-        m = self.manifest()
-        if m is None:
-            return self._du(self.root)
+        m = self._committed()
         return sum(self._du(f"{self.root}/{d}") for d in [m["base"], *m["segments"]])
 
 
@@ -458,7 +443,7 @@ def iceberg_commit_sql(
 
     - ``ddl``: one-time table creation.  ``sha_index`` is bucketed on
       ``text_sha`` — the Iceberg equivalent of the parquet layer's
-      sha-prefix partitioning (``sha_prefix_len``): the per-batch exact
+      sha-prefix partitioning (:data:`SHA_PREFIX_LEN`): the per-batch exact
       probe prunes its scan to the buckets the batch's keys hash into
       (storage-partitioned join keeps the index side shuffle-free too).
       ``sha_buckets`` plays pfx-space P in the 1 − e^(−B/P) read math

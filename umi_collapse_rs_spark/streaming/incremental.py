@@ -27,21 +27,24 @@ failure (at-least-once), so the sink must be idempotent.  Two halves:
    ``StateStore.commit_delta``, which skips ids at or below the
    manifest's high-water mark (``last_batch_id``).
 
-Assignments are written BEFORE the state commit, so every crash point
+Assignments are written BEFORE the state commit (:func:`absorb_batch`,
+shared with ``jobs/run_incremental.py --input``), so every crash point
 replays into the same final state: before the write → clean rerun;
 between write and commit → overwrite + commit; after commit (but
 before the query checkpoint advances) → overwrite + skipped commit.
 
 Micro-batch ids are monotone only WITHIN one checkpoint lineage — a
-FRESH checkpoint restarts them at 0, so ``batch_id <= hwm`` alone says
-nothing about whether the data was already absorbed (a new input dir,
-a different ``--max-files``, or a second query over the same state all
-produce low ids carrying genuinely NEW pages).  The sink therefore
+FRESH checkpoint restarts them at 0, so an id at or below the
+high-water mark alone says nothing about whether the data was already
+absorbed (a new input dir, a different ``--max-files``, or a second
+query over the same state all produce low ids carrying genuinely NEW
+pages).  The sink therefore
 records the streaming query id (stable across restarts of the same
 checkpoint, read from ``<checkpoint>/metadata``) and a per-batch
-content fingerprint in the manifest, and gates replays on LINEAGE:
+content fingerprint in the manifest, and gates replays on LINEAGE
+(``StateStore.lineage_gate``):
 
-- same query id, ``batch_id <= hwm`` → true replay, skip;
+- same query id, id at or below the mark → true replay, skip;
 - different query id over a store with streaming history → decide by
   CONTENT: a batch whose fingerprint matches a committed batch is a
   byte-identical re-delivery (skip); anything else FAILS FAST unless
@@ -68,7 +71,6 @@ whole BAM is materialized before clustering
 
 from __future__ import annotations
 
-import json
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,7 +78,12 @@ from pyspark.sql import functions as F
 
 from umi_collapse_rs_spark.config import DedupConfig
 from umi_collapse_rs_spark.plans.incremental import incremental_assign
-from umi_collapse_rs_spark.plans.state_store import StateStore
+from umi_collapse_rs_spark.plans.state_store import (
+    OTHER_LINEAGE,
+    REPLAY,
+    StateStore,
+    read_json,
+)
 from umi_collapse_rs_spark.streaming.ingest import stream_pages
 
 
@@ -85,17 +92,8 @@ def _checkpoint_query_id(spark: SparkSession, checkpoint_dir: str) -> str | None
     stable across restarts of the SAME checkpoint, different for a
     fresh one.  (The runId changes on every start; the id is the
     lineage identity we want.)  None until the query has started."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir.rstrip('/')}/metadata")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return None
-    stream = fs.open(path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(txt).get("id")
+    meta = read_json(spark, f"{checkpoint_dir.rstrip('/')}/metadata")
+    return meta.get("id") if meta else None
 
 
 def batch_fingerprint(batch_df: DataFrame) -> str:
@@ -112,6 +110,32 @@ def batch_fingerprint(batch_df: DataFrame) -> str:
         F.sum(F.xxhash64("url", "text").cast("decimal(38,0)")).alias("x"),
     ).head()
     return f"{row['n']}:{row['x']}"
+
+
+def absorb_batch(
+    spark: SparkSession,
+    store: StateStore,
+    batch_df: DataFrame,
+    cfg: DedupConfig,
+    out_path: str,
+    index_bucket_cap: int | None = 64,
+    compact_segments: int = 16,
+    batch_id: int | None = None,
+    stream_id: str | None = None,
+    batch_fp: str | None = None,
+) -> tuple[dict, dict | None]:
+    """Assign ``batch_df`` against the folded state, overwrite its
+    assignments at ``out_path``, THEN commit the delta (the crash-point
+    order of the module docstring; lineage args go to
+    ``commit_delta``), and compact once the log holds
+    ``compact_segments`` segments (0 = never).  Shared by the sink and
+    ``jobs/run_incremental.py --input``.  Returns the commit's manifest
+    and the compaction's, or None."""
+    res = incremental_assign(spark, store.read(), batch_df, cfg, index_bucket_cap=index_bucket_cap)
+    res.assignments.write.mode("overwrite").parquet(out_path)
+    m = store.commit_delta(res.delta, batch_id=batch_id, stream_id=stream_id, batch_fp=batch_fp)
+    full = compact_segments and len(m["segments"]) >= compact_segments
+    return m, (store.compact(gc=True) if full and not m.get("skipped_replay") else None)
 
 
 def incremental_sink(
@@ -159,24 +183,23 @@ def incremental_sink(
 
     def absorb(batch_df: DataFrame, batch_id: int) -> None:
         m = store.manifest() or {}
-        hwm, prev_sid = m.get("batch_id"), m.get("stream_id")
         sid = _stream_id()
-        same_lineage = sid is None or prev_sid is None or sid == prev_sid
-        if hwm is not None and same_lineage and batch_id <= hwm:
+        gate = StateStore.lineage_gate(m, batch_id, sid)
+        if gate == REPLAY:
             return  # true replay of a committed micro-batch
-        if batch_df.isEmpty():
-            return  # trigger fired with no new files
         fp = batch_fingerprint(batch_df)
-        if hwm is not None and not same_lineage:
+        if fp.startswith("0:"):
+            return  # row count 0: the trigger fired with no new files
+        if gate == OTHER_LINEAGE:
             # fresh checkpoint over a store with streaming history: ids
-            # restarted at 0, so <= hwm proves nothing.  Decide by
+            # restarted at 0, so the id proves nothing.  Decide by
             # content (module docstring).
             if fp in (m.get("batch_fps") or {}):
                 return  # byte-identical re-delivery of a committed batch
             if not allow_new_stream:
                 raise RuntimeError(
                     f"micro-batch {batch_id} arrived from a NEW checkpoint "
-                    f"lineage (query id {sid!r} != committed {prev_sid!r}) "
+                    f"lineage (query id {sid!r} != committed {m['stream_id']!r}) "
                     f"and its content matches no committed batch — "
                     "absorbing it could double-count pages the old lineage "
                     "already committed if the batching merely shifted. "
@@ -184,21 +207,11 @@ def incremental_sink(
                     "--allow-new-stream after verifying the input is "
                     "genuinely new data."
                 )
-        res = incremental_assign(
-            spark, store.read(), batch_df, cfg, index_bucket_cap=index_bucket_cap
+        absorb_batch(
+            spark, store, batch_df, cfg, f"{output_root}/batch_id={batch_id}",
+            index_bucket_cap=index_bucket_cap, compact_segments=compact_segments,
+            batch_id=batch_id, stream_id=sid, batch_fp=fp,
         )
-        # idempotent per-batch output dir; written BEFORE the state
-        # commit (see module docstring for the crash-point argument)
-        res.assignments.write.mode("overwrite").parquet(
-            f"{output_root}/batch_id={batch_id}"
-        )
-        m2 = store.commit_delta(res.delta, batch_id=batch_id, stream_id=sid, batch_fp=fp)
-        if (
-            compact_segments
-            and not m2.get("skipped_replay")
-            and len(m2["segments"]) >= compact_segments
-        ):
-            store.compact(gc=True)
 
     return absorb
 
