@@ -568,23 +568,27 @@ def q_near_dup_pairs(spark, sf_dir):
 
 
 def q_embedding_lsh_ann(spark, sf_dir):
-    """Similarity search, scale path: multiprobe hyperplane-LSH
-    bucketing with a per-bucket neighbor cap + exact cosine re-rank —
-    the distributed ANN variant (dim is a parameter, no driver-side
-    inference; within-bucket expansion bounded by the cap).
+    """Similarity search, scale path: single-table multiprobe
+    hyperplane LSH (``multitable_lsh_topk`` with ``n_tables=1``) with a
+    per-bucket neighbor cap + exact cosine re-rank — the distributed
+    ANN variant (dim is a parameter, no driver-side inference;
+    within-bucket expansion bounded by the cap).
 
     Plane count auto-scales to the corpus (log2(n / bucket_cap), from
     parquet footer metadata — no Spark job) with Hamming-2 multiprobe:
     the r2-verdict fix for the recall-dead fixed-16-planes default
-    (recall@3 0.004 -> 0.906 at sf0.01, BENCH/ANN.md)."""
+    (recall@3 0.004 -> 0.906 at sf0.01, BENCH/ANN.md).  Seed 42 gives
+    the planes its oracle, ``hyperplane_lsh_topk_oracle_sql``, embeds."""
     from umi_collapse_rs_spark.functions.embeddings import (
-        hyperplane_lsh_topk,
+        multitable_lsh_topk,
         parquet_num_rows,
     )
 
     e = _t(spark, sf_dir, "embeddings")
     n = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
-    return hyperplane_lsh_topk(e, "vec_id", "embedding", n_rows=n, probe_hamming=2)
+    return multitable_lsh_topk(
+        e, "vec_id", "embedding", n_rows=n, n_tables=1, probe_hamming=2, seed=42
+    )
 
 
 def q_substring_overlap_pairs(spark, sf_dir):
@@ -623,8 +627,9 @@ def q_substring_overlap_pairs(spark, sf_dir):
 
 
 def q_embedding_multitable_ann(spark, sf_dir):
-    """Similarity search, multi-table variant: 16 independent
-    hyperplane-LSH tables whose per-table plane count auto-scales to
+    """Similarity search, multi-table variant: independent
+    hyperplane-LSH tables (count from ``auto_n_tables``, Hamming-1
+    multiprobed) whose per-table plane count auto-scales to
     the corpus by the same occupancy rule as the single-table path
     (log2(n / bucket_cap) from parquet footer metadata — r3 verdict
     item #5: the fixed 6 planes left buckets far under the cap at

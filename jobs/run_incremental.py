@@ -53,8 +53,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--state", required=True, help="state root (manifest/ + base-g*/ + seg-*/)")
     ap.add_argument("--output", help="batch output dir (assignments/); required with --input")
     ap.add_argument("--merge", choices=["earliest", "quality", "any"], default="earliest")
-    ap.add_argument("--index-bucket-cap", type=int, default=64,
-                    help="state-probe skew bound (canonicals kept per band bucket); 0 = uncapped")
     ap.add_argument("--compact-segments", type=int, default=16,
                     help="auto-compact when the manifest carries >= N delta segments; 0 = never")
     ap.add_argument("--master", default=None)
@@ -93,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
             "wall_sec": round(time.monotonic() - t0, 2),
         }
     elif args.compact:
-        m = store.compact(gc=True)
+        m = store.compact()
         summary = {
             "mode": "compact",
             "version": m["version"],
@@ -111,7 +109,6 @@ def main(argv: list[str] | None = None) -> int:
         m, compacted = absorb_batch(
             spark, store, spark.read.parquet(args.input), cfg,
             f"{args.output}/assignments",
-            index_bucket_cap=args.index_bucket_cap or None,
             compact_segments=args.compact_segments,
         )
         a = spark.read.parquet(f"{args.output}/assignments")

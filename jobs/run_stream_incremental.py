@@ -52,8 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-files", type=int, default=1,
                     help="max drop files per micro-batch (source-side backpressure); 0 = unbounded")
     ap.add_argument("--merge", choices=["earliest", "quality", "any"], default="earliest")
-    ap.add_argument("--index-bucket-cap", type=int, default=64,
-                    help="state-probe skew bound (canonicals kept per band bucket); 0 = uncapped")
     ap.add_argument("--compact-segments", type=int, default=16,
                     help="auto-compact when the manifest carries >= N delta segments; 0 = never")
     ap.add_argument("--allow-new-stream", action="store_true",
@@ -87,7 +85,6 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         args.checkpoint,
         cfg,
-        index_bucket_cap=args.index_bucket_cap or None,
         compact_segments=args.compact_segments,
         max_files_per_trigger=args.max_files or None,
         available_now=not args.continuous,

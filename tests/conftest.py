@@ -32,3 +32,23 @@ def pipeline_500(spark, fixture_500):
     clusters = res.clusters.toPandas()
     pairs = res.pairs.toPandas()
     return {"pages": pages, "truth": truth, "res": res, "clusters": clusters, "pairs": pairs}
+
+
+@pytest.fixture(
+    params=[(1, True), (7, True), (13, False)], ids=["sp1-aqe", "sp7-aqe", "sp13-noaqe"]
+)
+def shuffle_setting(spark, request):
+    """Run one test at (spark.sql.shuffle.partitions, AQE on) =
+    ``request.param`` on the shared session, restoring the previous
+    values after it.  The default params: one task per exchange, an odd
+    count that matches neither the cores nor the session default, and
+    AQE off.  Tests may pick a subset with indirect parametrization."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        for key, value in zip(keys, request.param):
+            spark.conf.set(key, str(value).lower())
+        yield request.param
+    finally:
+        for key, value in zip(keys, saved):
+            spark.conf.set(key, value)

@@ -27,7 +27,7 @@ CFG = DedupConfig(window_tokens=0)  # numpy fingerprints, default gates
 # sha256 of the sorted (url, canonical_url, via) assignments and of the
 # sorted delta rows (sha_new, freq_delta, canon_new url+freq) of the
 # fixture_500 split; identical at local[4] / 8 partitions and local[2]
-# / 3 partitions
+# / 3 partitions, and at the shuffle settings tested below
 _INC_ASSIGNMENTS_SHA256 = "985e154994d1ce9bf08a8a95a98418b75eb07acf9cdb5d5015a9f828ae04b9e1"
 _INC_DELTA_SHA256 = "81ffcd4aac79b6ad4c659412e92963c5b8d72b6f260b9fbd28c5a49f10e51aa1"
 
@@ -193,6 +193,18 @@ def test_incremental_outputs_are_pinned(spark, inc_run, cfg):
     """Assignments and the persisted delta are pinned, and equal with
     and without window_tokens: the window pass is bulk-only."""
     inc = incremental_assign(spark, inc_run["state"], inc_run["new"], cfg)
+    assert incremental_digests(inc) == (_INC_ASSIGNMENTS_SHA256, _INC_DELTA_SHA256)
+
+
+@pytest.mark.parametrize(
+    "shuffle_setting", [(1, True), (13, False)], ids=["sp1-aqe", "sp13-noaqe"], indirect=True
+)
+def test_incremental_outputs_are_pinned_across_shuffle_settings(
+    spark, inc_run, shuffle_setting
+):
+    """Determinism guard: the same digests when the batch's exchanges
+    run at another task count, with and without AQE."""
+    inc = incremental_assign(spark, inc_run["state"], inc_run["new"], CFG)
     assert incremental_digests(inc) == (_INC_ASSIGNMENTS_SHA256, _INC_DELTA_SHA256)
 
 

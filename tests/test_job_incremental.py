@@ -16,6 +16,7 @@ from umi_collapse_rs_spark.config import DedupConfig
 from umi_collapse_rs_spark.plans.incremental import build_state, incremental_assign
 from umi_collapse_rs_spark.plans.pipeline import run_dedup_pipeline
 from umi_collapse_rs_spark.plans.state_store import StateStore
+from umi_collapse_rs_spark.streaming.incremental import INDEX_BUCKET_CAP
 
 CFG = DedupConfig(window_tokens=0)
 _JOB = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -82,7 +83,7 @@ def test_chained_job_auto_compacts_and_preserves_state(
     # equality vs the in-memory chain (same order, same cap)
     st = state0
     for b in batches:
-        st = incremental_assign(spark, st, b, CFG, index_bucket_cap=64).state_out
+        st = incremental_assign(spark, st, b, CFG, index_bucket_cap=INDEX_BUCKET_CAP).state_out
 
     def sha_pdf(df):
         return (

@@ -9,12 +9,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from umi_collapse_rs_spark import oracle
+from umi_collapse_rs_spark.config import DedupConfig
 from umi_collapse_rs_spark.operators.exact import exact_collapse, with_norm
+from umi_collapse_rs_spark.plans.pipeline import run_dedup_pipeline
 
 # sha256 of the sorted (url, canonical_url) rows of
 # run_dedup_pipeline(fixture_500, DedupConfig()) — numpy fingerprints
 # with the window pass; identical at local[4] / 8 partitions and
-# local[2] / 3 partitions
+# local[2] / 3 partitions, and at the shuffle settings tested below
 _CLUSTERS_SHA256 = "2ef8b8e605612eadeba6a59e955061a0be9217439e5efaea9015ac23fa23fe29"
 
 
@@ -25,6 +27,16 @@ def clusters_digest(clusters) -> str:
 
 def test_cluster_assignments_are_pinned(pipeline_500):
     assert clusters_digest(pipeline_500["clusters"]) == _CLUSTERS_SHA256
+
+
+def test_cluster_assignments_are_pinned_across_shuffle_settings(
+    spark, fixture_500, shuffle_setting
+):
+    """Determinism guard: the same hash when every exchange (and the
+    fingerprint stage, which follows the session's shuffle partitions)
+    runs at another task count, with and without AQE."""
+    res = run_dedup_pipeline(spark, fixture_500[0], DedupConfig())
+    assert clusters_digest(res.clusters.toPandas()) == _CLUSTERS_SHA256
 
 
 def test_recall_vs_planted_truth(pipeline_500):

@@ -123,8 +123,8 @@ def test_embedding_ann_plan_no_cartesian_no_driver_action(spark):
     via first()), and the candidate join must be a bucket equi-join —
     no CartesianProduct / nested-loop anywhere."""
     from umi_collapse_rs_spark.functions.embeddings import (
-        hyperplane_lsh_topk,
         lsh_blocked_near_dup_pairs,
+        multitable_lsh_topk,
         parquet_num_rows,
     )
 
@@ -132,7 +132,9 @@ def test_embedding_ann_plan_no_cartesian_no_driver_action(spark):
     n = parquet_num_rows("/root/testdata/sf0.001/embeddings.parquet")
     sc = spark.sparkContext
     sc.setJobGroup("ann_build_probe", "ann build must be lazy")
-    ann = hyperplane_lsh_topk(e, "vec_id", "embedding", n_rows=n)
+    ann = multitable_lsh_topk(
+        e, "vec_id", "embedding", n_rows=n, n_tables=1, probe_hamming=2
+    )
     ndp = lsh_blocked_near_dup_pairs(e, "vec_id", "embedding", threshold=0.35)
     assert sc.statusTracker().getJobIdsForGroup("ann_build_probe") == []
     sc.setJobGroup("", "")
@@ -154,7 +156,6 @@ def test_ann_scoring_parallelism_is_pinned(spark):
     in the plan is the marker AQE is forbidden to coalesce, so its
     presence IS the guarantee."""
     from umi_collapse_rs_spark.functions.embeddings import (
-        hyperplane_lsh_topk,
         ivf_topk,
         lsh_blocked_near_dup_pairs,
         multitable_lsh_topk,
@@ -181,7 +182,6 @@ def test_ann_scoring_parallelism_is_pinned(spark):
     for df in (
         ivf,
         fitted,
-        hyperplane_lsh_topk(e, "vec_id", "embedding", n_planes=6),
         lsh_blocked_near_dup_pairs(e, "vec_id", "embedding", threshold=0.35),
         multitable_lsh_topk(e, "vec_id", "embedding", n_tables=4, n_rows=100),
     ):

@@ -167,7 +167,7 @@ def test_embedding_lsh_vs_brute_force(spark):
     the true top-1 is decent on clustered vectors."""
     import numpy as np
 
-    from umi_collapse_rs_spark.functions.embeddings import cosine_sim_col, hyperplane_lsh_topk
+    from umi_collapse_rs_spark.functions.embeddings import multitable_lsh_topk
 
     rng = np.random.default_rng(5)
     # two tight clusters -> LSH must keep near neighbors together
@@ -177,7 +177,10 @@ def test_embedding_lsh_vs_brute_force(spark):
         c = centers[i % 2]
         rows.append((i, (c + 0.05 * rng.standard_normal(16)).astype(float).tolist()))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = hyperplane_lsh_topk(df, "vec_id", "embedding", dim=16, n_planes=4, k=1, seed=1)
+    out = multitable_lsh_topk(
+        df, "vec_id", "embedding", dim=16, n_tables=1, n_planes=4, k=1, seed=1,
+        probe_hamming=2,
+    )
     got = out.collect()
     # top-1 neighbor must be in the same cluster for nearly all points
     same = sum(1 for r in got if (r["qid"] % 2) == (r["neighbor_id"] % 2))

@@ -187,7 +187,7 @@ def test_compact_preserves_state_and_empties_log(st):
     before_canon = _canon_pdf(store.read().canonicals)
     old_segs = store.manifest()["segments"]
     assert old_segs  # the chain test committed segments
-    m = store.compact(gc=True)
+    m = store.compact()
     assert m["segments"] == []
     assert set(old_segs) <= set(m["gc_removed"])
     import pandas as pd

@@ -23,6 +23,7 @@ from umi_collapse_rs_spark.plans.incremental import build_state, incremental_ass
 from umi_collapse_rs_spark.plans.pipeline import run_dedup_pipeline
 from umi_collapse_rs_spark.plans.state_store import StateStore
 from umi_collapse_rs_spark.streaming.incremental import (
+    INDEX_BUCKET_CAP,
     incremental_sink,
     start_incremental_stream,
 )
@@ -141,7 +142,7 @@ def test_stream_equals_batch_chain_in_stream_order(spark, stream_run):
     chained = []
     for i in order:
         res = incremental_assign(
-            spark, state, stream_run["drops"][i], CFG, index_bucket_cap=64
+            spark, state, stream_run["drops"][i], CFG, index_bucket_cap=INDEX_BUCKET_CAP
         )
         chained.append(res.assignments.toPandas())
         state = res.state_out
@@ -297,7 +298,7 @@ def test_fresh_checkpoint_allow_new_stream_absorbs_once(spark, stream_run, tmp_p
     old_sid = store.manifest().get("stream_id")
     # expected: the committed state + ONE batch-API absorption of novel
     expected = incremental_assign(
-        spark, store.read(), novel, CFG, index_bucket_cap=64
+        spark, store.read(), novel, CFG, index_bucket_cap=INDEX_BUCKET_CAP
     ).state_out
     exp_sha, exp_canon = _sha_pdf(expected.sha_index), _canon_pdf(expected.canonicals)
 

@@ -71,6 +71,7 @@ def main() -> int:
     from umi_collapse_rs_spark.plans.pipeline import run_dedup_pipeline
     from umi_collapse_rs_spark.plans.state_store import StateStore
     from umi_collapse_rs_spark.session import get_spark
+    from umi_collapse_rs_spark.streaming.incremental import INDEX_BUCKET_CAP
 
     port = 4049
     spark = get_spark(
@@ -114,7 +115,7 @@ def main() -> int:
     def run_batch(k: int):
         def inner():
             st = store.read()
-            res = incremental_assign(spark, st, batches[k], cfg, index_bucket_cap=64)
+            res = incremental_assign(spark, st, batches[k], cfg, index_bucket_cap=INDEX_BUCKET_CAP)
             a = res.assignments.localCheckpoint(eager=True)
             vias = {r["via"]: r["count"] for r in a.groupBy("via").count().collect()}
             # READ evidence (r4 verdict item #1): on-disk bytes the
@@ -209,7 +210,7 @@ def main() -> int:
     read_sweep = []
     for n in (10, 40, 160, 640, 2560):
         res = incremental_assign(
-            spark, store.read(), nine.limit(n), cfg, index_bucket_cap=64
+            spark, store.read(), nine.limit(n), cfg, index_bucket_cap=INDEX_BUCKET_CAP
         )
         rb = store.sha_read_bytes(res.probe_prefixes)
         read_sweep.append(
@@ -225,7 +226,7 @@ def main() -> int:
     # preserves the state exactly (rows + total absorbed mass)
     pre_read = measured(fold_probe)
     comp = measured(
-        lambda: {"state_write_bytes": store.compact(gc=True)["bytes_written"]}
+        lambda: {"state_write_bytes": store.compact()["bytes_written"]}
     )
     post_read = measured(fold_probe)
     for key in ("sha_rows", "canon_rows", "freq_total"):

@@ -178,22 +178,9 @@ def main() -> int:
     os.chdir(repo)
     sys.path.insert(0, repo)
 
-    pages_path = f"/tmp/ucs_scaling_pages_{n_pages}.parquet"
-    if not os.path.exists(pages_path):
-        from umi_collapse_rs_spark.fixtures import generate_pages
+    from bench import _fixture_parquet
 
-        pdf, _ = generate_pages(n_pages)
-        # small row groups: parquet splits at ROW-GROUP granularity, so a
-        # single-row-group file (pyarrow default: 1Mi rows) would make
-        # the whole scan ONE task no matter how many cores — serializing
-        # stage 1 and anything before the first shuffle
-        pdf.to_parquet(
-            pages_path,
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-            row_group_size=8192,
-        )
+    pages_path = _fixture_parquet(n_pages)
     zip_path = "/tmp/ucs_scaling.zip"
     subprocess.run(
         ["zip", "-qr", zip_path, "umi_collapse_rs_spark", "-x", "*__pycache__*"],

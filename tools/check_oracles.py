@@ -2,11 +2,19 @@
 """Local stand-in for the driver's correctness gate: run each
 queries()[name] on Spark and oracle_sql()[name] on DuckDB over the same
 sf dir, compare row count, column names, and an order-insensitive
-value hash.  Usage: python tools/check_oracles.py [sf_dir] [name...]"""
+value hash.  Usage: python tools/check_oracles.py [sf_dir] [name...]
+
+DuckDB runs under a memory limit of a quarter of host RAM and spills to
+a temporary directory under /tmp, so an oracle whose join or window
+outgrows memory (the ANN rows at larger sf) spills instead of getting
+the process OOM-killed."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -31,11 +39,24 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     sys.path.insert(0, ".")
-    import __spark_entry__ as entry
     from umi_collapse_rs_spark.session import get_spark
 
     spark = get_spark(app_name="check_oracles", shuffle_partitions=8)
-    con = duckdb.connect()
+    spill_dir = tempfile.mkdtemp(prefix="check_oracles_duckdb_", dir="/tmp")
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(
+        config={"memory_limit": f"{ram // 4 >> 20}MB", "temp_directory": spill_dir}
+    )
+    try:
+        return _compare(spark, con, sf_dir, only)
+    finally:
+        con.close()
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+
+def _compare(spark, con, sf_dir: str, only: set[str]) -> int:
+    import __spark_entry__ as entry
+
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 

@@ -251,80 +251,6 @@ def hyperplane_signature_col(emb, planes: np.ndarray):
     return out
 
 
-def hyperplane_lsh_topk(
-    df: DataFrame,
-    id_col: str,
-    emb_col: str,
-    dim: int = EMBEDDING_DIM,
-    n_planes: int | None = None,
-    k: int = 3,
-    bucket_cap: int = 64,
-    seed: int = 42,
-    n_rows: int | None = None,
-    probe_hamming: int = 2,
-) -> DataFrame:
-    """Approximate top-k cosine neighbors via multiprobe hyperplane LSH.
-
-    Candidates = query's own bucket plus every probe bucket within
-    Hamming distance ``probe_hamming`` of it, against a neighbor side
-    capped at ``bucket_cap`` members per bucket (rank by id —
-    deterministic).  Exact cosine then ranks candidates.  Each
-    (query, neighbor) pair arises from exactly one probe (probe buckets
-    are distinct and a neighbor lives in one bucket), so no dedup
-    shuffle is needed.
-
-    ``n_planes`` defaults to :func:`auto_n_planes` of ``n_rows`` (pass
-    the corpus size, e.g. from :func:`parquet_num_rows`) so bucket
-    occupancy — not a constant — sets the precision/recall point;
-    candidates stay bounded at (1 + planes + C(planes,2)) * bucket_cap
-    per query.  Measured recall@3 on the structure-free sandbox
-    vectors: 0.906 at n=500 / 0.642 at n=2000 (BENCH/ANN.md), vs 0.004
-    for the old fixed-16-planes Hamming-1 config.
-    """
-    if n_planes is None:
-        if n_rows is None:
-            raise ValueError("pass n_planes explicitly or n_rows for auto-scaling")
-        n_planes = auto_n_planes(n_rows, bucket_cap)
-    planes = lsh_planes(n_planes, dim, seed)
-    spark_p = session_shuffle_partitions(df.sparkSession)
-    sig = _spread_input(df, spark_p, id_col).select(
-        F.col(id_col), F.col(emb_col),
-        hyperplane_signature_col(F.col(emb_col), planes).alias("bucket"),
-        norm_col(F.col(emb_col), dim).alias("_nrm"),
-    )
-    wb = Window.partitionBy("bucket").orderBy(id_col)
-    nbr = (
-        sig.withColumn("_r", F.row_number().over(wb))
-        .filter(F.col("_r") <= bucket_cap)
-        .select(
-            F.col(id_col).alias("nid"), F.col(emb_col).alias("ne"),
-            F.col("_nrm").alias("nn"), "bucket",
-        )
-    )
-    probes = F.array(
-        F.col("bucket"),
-        *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in _probe_masks(n_planes, probe_hamming)],
-    )
-    # explicit count pins the scoring stage at spark_p tasks (see
-    # _salt_count; bucket space is 2^n_planes — wide enough unsalted)
-    q = sig.select(
-        F.col(id_col).alias("qid"),
-        F.col(emb_col).alias("qe"),
-        F.col("_nrm").alias("nq"),
-        F.explode(probes).alias("bucket"),
-    ).repartition(spark_p, "bucket")
-    cand = q.join(nbr, "bucket").filter(F.col("qid") != F.col("nid"))
-    scored = cand.withColumn(
-        "sim", dot_col(F.col("qe"), F.col("ne"), dim) / (F.col("nq") * F.col("nn"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", F.col("nid").alias("neighbor_id"), F.round("sim", 4).alias("cos_sim"), "rnk")
-    )
-
-
 def lsh_blocked_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -398,14 +324,17 @@ def multitable_lsh_topk(
     Only the query side explodes probes; the neighbor side stays one
     row per (table, vector).
 
-    vs the single-table multiprobe variant (:func:`hyperplane_lsh_topk`):
-    more tables buy recall the way more probes do, but each table is an
-    independent coarse partition, so recall holds even when the corpus
-    has no cluster structure (measured on the near-uniform sandbox
-    vectors: ~0.6 recall@3 where 16-plane single-table measures 0.004 —
+    ``n_tables=1`` is the single-table multiprobe form
+    (``embedding_lsh_ann``: ``probe_hamming=2, seed=42``, checked
+    against :func:`hyperplane_lsh_topk_oracle_sql`).  More tables buy
+    recall the way more probes do, but each table is an independent
+    coarse partition, so recall holds even when the corpus has no
+    cluster structure (measured on the near-uniform sandbox vectors:
+    ~0.6 recall@3 where 16-plane single-table measures 0.004 —
     BENCH/ANN.md).  Candidates stay bounded at
-    ``n_tables * bucket_cap`` per query regardless of skew: each
-    (table, bucket) neighbor list is capped by deterministic id rank.
+    ``n_tables * probes * bucket_cap`` per query regardless of skew:
+    each (table, bucket) neighbor list is capped by deterministic id
+    rank.
 
     A pair can collide in several tables, so candidates are deduped on
     (qid, nid) BEFORE the cosine — and the candidate/dedup exchanges
@@ -419,20 +348,20 @@ def multitable_lsh_topk(
     ~23% of all pairs collide in some table (~0.94M distinct pairs at
     2k vectors), and each distinct pair is cosine-scored once.
 
-    ``n_planes`` defaults to the SAME occupancy rule as the
-    single-table path (:func:`auto_n_planes` of ``n_rows``, r3 verdict
-    item #5): each table's 2^planes buckets are sized so expected
-    occupancy ~ ``bucket_cap``, so the per-(table, bucket) cap stops
-    truncating neighbor lists — at the fixed 6 planes the sf0.01 tables
-    had 64 buckets for 500 vectors (occupancy 8, cap 64 idle) while
-    sf-up corpora overflowed.  ``n_tables`` defaults to
-    :func:`auto_n_tables` of the same ``n_rows`` (r4 verdict item #2:
-    at a FIXED 16 tables recall decayed with corpus size — 0.962 at
-    n=500, 0.730 at n=2000 — because per-table collision probability
-    p^b falls as the occupancy rule raises b; the table count now
-    solves 1 − (1 − p^b)^L ≥ target).  Measured recall@3 on the
-    structure-free sandbox vectors with both autos: ≥ 0.9 at n=500 AND
-    n=2000 at the published max_tables × bucket_cap candidate bound
+    ``n_planes`` defaults to the occupancy rule (:func:`auto_n_planes`
+    of ``n_rows``, r3 verdict item #5): each table's 2^planes buckets
+    are sized so expected occupancy ~ ``bucket_cap``, so the
+    per-(table, bucket) cap stops truncating neighbor lists — at the
+    fixed 6 planes the sf0.01 tables had 64 buckets for 500 vectors
+    (occupancy 8, cap 64 idle) while sf-up corpora overflowed.
+    ``n_tables`` defaults to :func:`auto_n_tables` of the same
+    ``n_rows`` (r4 verdict item #2: at a FIXED 16 tables recall
+    decayed with corpus size — 0.962 at n=500, 0.730 at n=2000 —
+    because per-table collision probability p^b falls as the
+    occupancy rule raises b; the table count now solves
+    1 − (1 − p^b)^L ≥ target).  Measured recall@3 on the structure-free
+    sandbox vectors with both autos: ≥ 0.9 at n=500 AND n=2000 at the
+    published max_tables × bucket_cap candidate bound
     (BENCH/ANN.md carries the full n-sweep and the frontier past the
     clamp).
     """
@@ -459,13 +388,13 @@ def multitable_lsh_topk(
         ]
     )
     base = _spread_input(df, spark_p, id_col)
-    # (id, t, bkt) is ~24 B/row x n_tables; materializing it once means
-    # the 96-fold signature projection runs ONE pass over the corpus
-    # instead of once per join branch (query side + capped neighbor side)
-    sig = (
-        base.select(F.col(id_col), F.explode(tb).alias("_tb"))
-        .select(id_col, F.col("_tb.t").alias("t"), F.col("_tb.bkt").alias("bkt"))
-        .localCheckpoint(eager=False)
+    # (id, t, bkt), ~24 B/row x n_tables.  Each join branch (query side
+    # + capped neighbor side) projects it from the spread input; the
+    # plane dots are O(rows), small next to the O(candidates) scoring.
+    # Kept lazy: a localCheckpoint here runs the input stage when the
+    # query is built under AQE, a Spark job before any action.
+    sig = base.select(F.col(id_col), F.explode(tb).alias("_tb")).select(
+        id_col, F.col("_tb.t").alias("t"), F.col("_tb.bkt").alias("bkt")
     )
     wb = Window.partitionBy("t", "bkt").orderBy(id_col)
     nbr = (
@@ -768,9 +697,8 @@ def hyperplane_lsh_topk_oracle_sql(
     probe_hamming: int = 2,
 ) -> str:
     if n_planes is None:
-        # mirror the Spark twin's guard (hyperplane_lsh_topk): a no-arg
-        # call must fail with the same explicit message, not an opaque
-        # TypeError inside auto_n_planes (ADVICE r3)
+        # a no-arg call must fail with an explicit message, not an
+        # opaque TypeError inside auto_n_planes (ADVICE r3)
         if n_rows is None:
             raise ValueError("pass n_planes explicitly or n_rows for auto-scaling")
         n_planes = auto_n_planes(n_rows, bucket_cap)

@@ -324,10 +324,10 @@ class StateStore:
         m["bytes_written"] = self._du(f"{self.root}/{seg}")
         return m
 
-    def compact(self, gc: bool = True) -> dict:
+    def compact(self) -> dict:
         """Fold committed segments into a fresh base (one O(corpus)
         write, amortized over the batches since the last compaction),
-        commit a segments=[] manifest, optionally GC the old dirs.  A
+        commit a segments=[] manifest, then GC the old dirs.  A
         kill at any point leaves the previous manifest readable."""
         prev = self._committed()
         state = self.read()
@@ -336,8 +336,7 @@ class StateStore:
         self._write_base(state, base, prev["sha_pfx_len"])
         m = self._commit_manifest(base, [])
         m["bytes_written"] = self._du(f"{self.root}/{base}")
-        if gc:
-            m["gc_removed"] = self.gc()
+        m["gc_removed"] = self.gc()
         return m
 
     def gc(self) -> list[str]:

@@ -86,6 +86,10 @@ from umi_collapse_rs_spark.plans.state_store import (
 )
 from umi_collapse_rs_spark.streaming.ingest import stream_pages
 
+# skew bound of the state probe: canonicals kept per band bucket
+# (``incremental_assign``'s ``index_bucket_cap``)
+INDEX_BUCKET_CAP = 64
+
 
 def _checkpoint_query_id(spark: SparkSession, checkpoint_dir: str) -> str | None:
     """The streaming query id persisted in ``<checkpoint>/metadata`` —
@@ -118,7 +122,6 @@ def absorb_batch(
     batch_df: DataFrame,
     cfg: DedupConfig,
     out_path: str,
-    index_bucket_cap: int | None = 64,
     compact_segments: int = 16,
     batch_id: int | None = None,
     stream_id: str | None = None,
@@ -131,11 +134,13 @@ def absorb_batch(
     ``compact_segments`` segments (0 = never).  Shared by the sink and
     ``jobs/run_incremental.py --input``.  Returns the commit's manifest
     and the compaction's, or None."""
-    res = incremental_assign(spark, store.read(), batch_df, cfg, index_bucket_cap=index_bucket_cap)
+    res = incremental_assign(
+        spark, store.read(), batch_df, cfg, index_bucket_cap=INDEX_BUCKET_CAP
+    )
     res.assignments.write.mode("overwrite").parquet(out_path)
     m = store.commit_delta(res.delta, batch_id=batch_id, stream_id=stream_id, batch_fp=batch_fp)
     full = compact_segments and len(m["segments"]) >= compact_segments
-    return m, (store.compact(gc=True) if full and not m.get("skipped_replay") else None)
+    return m, (store.compact() if full and not m.get("skipped_replay") else None)
 
 
 def incremental_sink(
@@ -143,7 +148,6 @@ def incremental_sink(
     state_root: str,
     output_root: str,
     cfg: DedupConfig | None = None,
-    index_bucket_cap: int | None = 64,
     compact_segments: int = 16,
     checkpoint_dir: str | None = None,
     allow_new_stream: bool = False,
@@ -209,7 +213,7 @@ def incremental_sink(
                 )
         absorb_batch(
             spark, store, batch_df, cfg, f"{output_root}/batch_id={batch_id}",
-            index_bucket_cap=index_bucket_cap, compact_segments=compact_segments,
+            compact_segments=compact_segments,
             batch_id=batch_id, stream_id=sid, batch_fp=fp,
         )
 
@@ -223,7 +227,6 @@ def start_incremental_stream(
     output_root: str,
     checkpoint_dir: str,
     cfg: DedupConfig | None = None,
-    index_bucket_cap: int | None = 64,
     compact_segments: int = 16,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -246,7 +249,6 @@ def start_incremental_stream(
                 state_root,
                 output_root,
                 cfg,
-                index_bucket_cap=index_bucket_cap,
                 compact_segments=compact_segments,
                 checkpoint_dir=checkpoint_dir,
                 allow_new_stream=allow_new_stream,
