@@ -29,7 +29,10 @@ the summary JSON and measured in BENCH/INCREMENTAL.md.
 
 ``--compact-segments N`` folds the log into a fresh base once the
 manifest carries >= N segments (one O(corpus) write amortized over N
-batches) — the parquet spelling of Iceberg table compaction.
+batches) — the parquet spelling of Iceberg table compaction.  The
+``--bootstrap`` and ``--compact`` summaries report the committed base's
+``sha_pfx_len`` (its sha-index partition layout, derived from the
+index size) next to ``state_write_bytes``.
 
 No reference analog (umi-collapse-rs is single-corpus per run); the
 config flags mirror jobs/run_dedup.py.
@@ -88,6 +91,7 @@ def main(argv: list[str] | None = None) -> int:
             "pages": pages.count(),
             "clusters": store.read().canonicals.count(),
             "state_write_bytes": m["bytes_written"],
+            "sha_pfx_len": m["sha_pfx_len"],
             "wall_sec": round(time.monotonic() - t0, 2),
         }
     elif args.compact:
@@ -96,6 +100,7 @@ def main(argv: list[str] | None = None) -> int:
             "mode": "compact",
             "version": m["version"],
             "state_write_bytes": m["bytes_written"],
+            "sha_pfx_len": m["sha_pfx_len"],
             "gc_removed": len(m.get("gc_removed", [])),
             "wall_sec": round(time.monotonic() - t0, 2),
         }

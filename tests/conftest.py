@@ -52,3 +52,18 @@ def shuffle_setting(spark, request):
     finally:
         for key, value in zip(keys, saved):
             spark.conf.set(key, value)
+
+
+@pytest.fixture
+def force_sha_prefix_len(monkeypatch):
+    """``force(rows, n)``: set the store's target rows per prefix dir so
+    that a sha index of ``rows`` rows is written at prefix length ``n``
+    (ceil(log16(rows / target)) == n) for the rest of the test.  Tests
+    check the result on the bootstrap manifest's ``sha_pfx_len``."""
+    from umi_collapse_rs_spark.plans import state_store
+
+    def force(rows: int, n: int) -> None:
+        target = -(-rows // 16**n)
+        monkeypatch.setattr(state_store, "ROWS_PER_PREFIX", target, raising=False)
+
+    return force

@@ -208,6 +208,27 @@ def test_incremental_outputs_are_pinned_across_shuffle_settings(
     assert incremental_digests(inc) == (_INC_ASSIGNMENTS_SHA256, _INC_DELTA_SHA256)
 
 
+@pytest.mark.parametrize("pfx_len", [None, 2], ids=["derived", "len2"])
+def test_incremental_outputs_are_pinned_across_prefix_lengths(
+    spark, inc_run, tmp_path, force_sha_prefix_len, pfx_len
+):
+    """Determinism guard for the store layout: the same digests when the
+    state is bootstrapped into a StateStore and the batch is assigned
+    against ``store.read()`` (prefix-pruned exact probe), at the length
+    the store derives for this index (1) and at the old fixed length 2."""
+    from umi_collapse_rs_spark.plans.state_store import StateStore
+
+    if pfx_len is not None:
+        force_sha_prefix_len(inc_run["state"].sha_index.count(), pfx_len)
+    store = StateStore(spark, str(tmp_path / "state"))
+    m = store.bootstrap(inc_run["state"])
+    assert m["sha_pfx_len"] == (pfx_len or 1)
+    inc = incremental_assign(spark, store.read(), inc_run["new"], CFG)
+    assert inc.probe_prefixes
+    assert all(len(p) == m["sha_pfx_len"] for p in inc.probe_prefixes)
+    assert incremental_digests(inc) == (_INC_ASSIGNMENTS_SHA256, _INC_DELTA_SHA256)
+
+
 def test_empty_state_degenerates_to_full_batch_clustering(spark, fixture_500):
     """With no state, every page goes through the residual path and the
     assignment equals the full pipeline's cluster mapping on the same

@@ -287,21 +287,31 @@ def test_prefix_pruned_probe_matches_unpruned(spark, st):
     assert all(len(p) == pfx_len for p in prefixes)
 
 
+def _two_prefixes(store) -> list[str]:
+    """The two lowest sha prefixes at the store's layout ("0", "1" at
+    length 1; "00", "01" at length 2)."""
+    n = store.manifest()["sha_pfx_len"]
+    return ["0" * n, "0" * (n - 1) + "1"]
+
+
 def test_prefix_pruning_reaches_the_scan(spark, st):
     """The isin prefix filter must land as a partition filter on the
     base scan — fewer files read, not a post-scan filter over the full
     index (the difference between O(batch-prefixes) and O(corpus) reads
     at 10^12 docs)."""
+    prefixes = _two_prefixes(st["store"])
     sha = st["store"].read().sha_index
     all_files = set(sha.inputFiles())
-    two = sha.filter(F.col("sha_pfx").isin(["00", "01"]))
+    two = sha.filter(F.col("sha_pfx").isin(prefixes))
     # physical files actually selected after partition pruning
     pruned_files = {
         r[0] for r in two.select(F.input_file_name()).distinct().collect()
     }
     assert pruned_files  # the prefixes exist in a 400-page corpus
     assert len(pruned_files) < len(all_files)
-    assert all("/sha_pfx=00/" in f or "/sha_pfx=01/" in f for f in pruned_files)
+    assert all(
+        any(f"/sha_pfx={p}/" in f for p in prefixes) for f in pruned_files
+    )
 
 
 def test_sha_read_bytes_tracks_prefix_count(st):
@@ -309,11 +319,90 @@ def test_sha_read_bytes_tracks_prefix_count(st):
     attributed to a 2-prefix probe are a strict fraction of the full
     index; None reports the full index."""
     store = st["store"]
+    prefixes = _two_prefixes(store)
     full = store.sha_read_bytes(None)
-    pruned = store.sha_read_bytes(["00", "01"])
+    pruned = store.sha_read_bytes(prefixes)
     assert 0 < pruned < full
     # monotone in the prefix set
-    assert store.sha_read_bytes(["00"]) <= pruned
+    assert store.sha_read_bytes(prefixes[:1]) <= pruned
+
+
+def test_prefix_len_follows_the_index_size():
+    """The base layout is derived from the sha-index row count: ~2^20
+    rows per prefix dir, clamped to [1, 5]."""
+    from umi_collapse_rs_spark.plans.state_store import ROWS_PER_PREFIX, sha_prefix_len
+
+    assert ROWS_PER_PREFIX == 1 << 20
+    assert [sha_prefix_len(r) for r in (0, 1, 1100, 16 << 20)] == [1, 1, 1, 1]
+    assert sha_prefix_len((16 << 20) + 1) == 2
+    assert sha_prefix_len(256 << 20) == 2
+    assert sha_prefix_len(10**12) == 5
+    assert sha_prefix_len(10**15) == 5
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description"):
+        sc.setLocalProperty(key, None)
+
+
+def test_read_starts_no_spark_job(spark, st, tmp_path):
+    """Opening the folded state lists files but runs nothing: every
+    table is read with its known schema (no schema-inference job per
+    parquet read) and the base has few enough prefix dirs to list on
+    the driver."""
+    store = StateStore(spark, str(tmp_path / "jobs"))
+    store.bootstrap(st["state"])
+    store.commit_delta(st["inc"].delta)
+    store.commit_delta(st["inc"].delta)
+    assert len(store.manifest()["segments"]) == 2
+    sc = spark.sparkContext
+    sc.setJobGroup("state_read_probe", "state_read_probe")
+    try:
+        store.read()
+    finally:
+        _clear_job_group(sc)
+    assert sc.statusTracker().getJobIdsForGroup("state_read_probe") == []
+
+
+def test_batch_writes_run_at_most_session_tasks(
+    spark, st, tmp_path, monkeypatch, force_sha_prefix_len
+):
+    """On a store at prefix length 2 (a few hundred base prefix dirs),
+    the jobs ``absorb_batch`` starts after ``incremental_assign``
+    returns — the assignment write and the segment writes — run no
+    stage wider than the session's task count: the batch side is sized
+    by the batch, not by the pruned index scan's splits."""
+    from umi_collapse_rs_spark.session import session_shuffle_partitions
+    from umi_collapse_rs_spark.streaming import incremental as sink_mod
+
+    force_sha_prefix_len(st["state"].sha_index.count(), 2)
+    store = StateStore(spark, str(tmp_path / "len2"))
+    assert store.bootstrap(st["state"])["sha_pfx_len"] == 2
+    sc = spark.sparkContext
+    group = "batch_write_probe"
+    real_assign = sink_mod.incremental_assign
+
+    def assign_then_group(*args, **kwargs):
+        res = real_assign(*args, **kwargs)
+        sc.setJobGroup(group, group)
+        return res
+
+    monkeypatch.setattr(sink_mod, "incremental_assign", assign_then_group)
+    try:
+        sink_mod.absorb_batch(
+            spark, store, st["new"], CFG, str(tmp_path / "out"), compact_segments=0
+        )
+    finally:
+        _clear_job_group(sc)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    # tasks each stage ran (a stage skipped because an earlier job
+    # already produced its shuffle output ran none)
+    stages = {sid for j in jobs for sid in tracker.getJobInfo(j).stageIds}
+    widths = {sid: tracker.getStageInfo(sid).numCompletedTasks for sid in stages}
+    assert any(widths.values())
+    assert max(widths.values()) <= session_shuffle_partitions(spark), widths
 
 
 def test_iceberg_commit_sql_pinned(spark):

@@ -344,8 +344,8 @@ commit.  {spark.sparkContext.master}, warm JVM.
 ## State READS (prefix-pruned exact probe)
 
 The sha index — the one O(corpus)-rows table — is prefix-partitioned
-on disk (16^{pfx_len} = {16 ** pfx_len} dirs at the store default
-pfx_len={pfx_len}); the per-batch exact probe collects the batch's
+on disk (16^{pfx_len} = {16 ** pfx_len} dirs at the length the store
+derived for this index, pfx_len={pfx_len}); the per-batch exact probe collects the batch's
 distinct sha prefixes (bounded driver metadata — at most {16 ** pfx_len}
 short strings, never rows) and pushes an `isin` partition filter into
 the base scan, for the hit join AND the anti-join (partition pruning

@@ -7,12 +7,16 @@ value hash.  Usage: python tools/check_oracles.py [sf_dir] [name...]
 DuckDB runs under a memory limit of a quarter of host RAM and spills to
 a temporary directory under /tmp, so an oracle whose join or window
 outgrows memory (the ANN rows at larger sf) spills instead of getting
-the process OOM-killed."""
+the process OOM-killed.  The directory is removed on exit, also when
+the run is stopped by SIGTERM (``timeout``, ``kill``): the handler
+turns the signal into SystemExit.  SIGKILL cannot be handled, so a
+SIGKILLed run leaves its ``/tmp/check_oracles_duckdb_*`` behind."""
 
 from __future__ import annotations
 
 import os
 import shutil
+import signal
 import sys
 import tempfile
 
@@ -41,6 +45,8 @@ def main() -> int:
     sys.path.insert(0, ".")
     from umi_collapse_rs_spark.session import get_spark
 
+    # SIGTERM -> SystemExit(143), so the finally below still runs
+    signal.signal(signal.SIGTERM, lambda signum, frame: sys.exit(128 + signum))
     spark = get_spark(app_name="check_oracles", shuffle_partitions=8)
     spill_dir = tempfile.mkdtemp(prefix="check_oracles_duckdb_", dir="/tmp")
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")

@@ -72,6 +72,7 @@ from umi_collapse_rs_spark.plans.pipeline import (
     normalized_pages,
     pair_nodes,
 )
+from umi_collapse_rs_spark.session import session_shuffle_partitions
 
 
 @dataclass
@@ -167,8 +168,9 @@ def incremental_assign(
     # to the batch's own prefixes (a batch sha can only match an index
     # row sharing its prefix, for the join AND the anti-join).
     # The collect is bounded metadata — at most 16^pfx_len short
-    # strings (256 at the default), never rows — the same driver-side
-    # footprint as an AQE statistic.  Index bytes read become
+    # strings (16 at a few thousand pages, ~10^6 at 10^12 docs; the
+    # store derives pfx_len from the index size), never rows — the same
+    # driver-side footprint as an AQE statistic.  Index bytes read become
     # ~ touched_partitions × (index_bytes / partitions), tracking batch
     # mass while the batch is smaller than the prefix space
     # (BENCH/INCREMENTAL.md measures the curve and the saturation
@@ -262,9 +264,17 @@ def incremental_assign(
     )
 
     # --- assemble: one row per NEW page ------------------------------
-    # cut: rep_assign feeds assignments + absorbed + new_sizes + sha_new
+    # cut: rep_assign feeds assignments + absorbed + new_sizes + sha_new.
+    # The broadcast exact join streams the pruned index scan, so the
+    # union has one partition per index split (plus the other
+    # branches') — coalesce (no shuffle) to the session's task count so
+    # the assignment and segment writes are sized by the batch, not by
+    # the index's file layout.
     rep_assign = (
-        sha_hit.unionByName(near_hit).unionByName(new_hit).localCheckpoint(eager=False)
+        sha_hit.unionByName(near_hit)
+        .unionByName(new_hit)
+        .coalesce(session_shuffle_partitions(spark))
+        .localCheckpoint(eager=False)
     )
     assignments = (
         members_n.join(reps_n.select("text_sha", F.col("url").alias("rep_url")), "text_sha")

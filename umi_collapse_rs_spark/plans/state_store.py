@@ -33,13 +33,19 @@ highest manifest version; :meth:`gc` (safe at startup) removes
 unreferenced dirs and stale ``.tmp`` files.
 
 The base sha index — the one O(corpus)-rows table — is partitioned on
-the first :data:`SHA_PREFIX_LEN` hex chars of ``text_sha`` (16^n
-``sha_pfx=`` dirs), so the per-batch exact probe prunes its scan to
-the prefixes the batch touches (plans/incremental.py): a B-key batch
-over P partitions reads a 1 - e^(-B/P) fraction of the index
-(BENCH/INCREMENTAL.md; at 10^12 docs P must grow with the corpus,
-SCALE.md).  Bootstrap records the length in the manifest as
-``sha_pfx_len``, which readers and compaction use.
+the first n hex chars of ``text_sha`` (16^n ``sha_pfx=`` dirs), so the
+per-batch exact probe prunes its scan to the prefixes the batch
+touches (plans/incremental.py): a B-key batch over P partitions reads
+a 1 - e^(-B/P) fraction of the index (BENCH/INCREMENTAL.md).  n grows
+with the corpus (:func:`sha_prefix_len`: ~:data:`ROWS_PER_PREFIX`
+index rows per dir; 1 up to 16 Mi rows, 5 at 10^12 docs — SCALE.md),
+so a small state is not cut into hundreds of tiny dirs whose listing
+and scan splits a batch would pay for.  Every base write (bootstrap
+and compaction) derives n from the index it writes and records it in
+the manifest as ``sha_pfx_len``, which readers use; a store written at
+another length reads unchanged.  Every table is read with its known schema (the
+Iceberg DDL's types, :func:`iceberg_commit_sql`), so a read lists
+files but runs no Spark job.
 
 Reads fold the log: ``sha_index = base ∪ all sha_new``;
 ``canonicals = (base ∪ all canon_new) left-join Σ freq_delta``.  The
@@ -73,12 +79,30 @@ from umi_collapse_rs_spark.plans.incremental import DedupState, StateDelta
 
 _CANON_COLS = ["url", "freq", "simhash", "mh_bands", "mh_sig"]
 
-# hex chars of text_sha that key the base sha-index partitions (16^n
-# dirs); written into each bootstrap's manifest as ``sha_pfx_len``
-SHA_PREFIX_LEN = 2
+# column types of the stored tables (also the Iceberg DDL's); reads
+# pass them so Spark infers nothing (one job per schemaless read)
+_SHA_SCHEMA = "text_sha string, canonical_url string"
+_CANON_SCHEMA = (
+    "url string, freq bigint, simhash bigint, "
+    "mh_bands array<bigint>, mh_sig array<bigint>"
+)
+_FREQ_DELTA_SCHEMA = "url string, added bigint"
+
+# target sha-index rows per base ``sha_pfx=`` dir (see sha_prefix_len)
+ROWS_PER_PREFIX = 1 << 20
 
 # lineage_gate verdicts
 REPLAY, OTHER_LINEAGE, NEW = "replay", "other_lineage", "new"
+
+
+def sha_prefix_len(rows: int) -> int:
+    """Hex chars of text_sha that key the base sha-index partitions for
+    an index of ``rows`` rows: ceil(log16(rows / ROWS_PER_PREFIX)),
+    clamped to [1, 5] — 1 up to 16 Mi rows, 5 at 10^12 docs."""
+    n = 1
+    while n < 5 and ROWS_PER_PREFIX * 16**n < rows:
+        n += 1
+    return n
 
 
 def read_json(spark: SparkSession, path: str) -> dict | None:
@@ -167,6 +191,7 @@ class StateStore:
         self,
         base: str,
         segments: list[str],
+        sha_pfx_len: int,
         batch_id: int | None = None,
         stream_id: str | None = None,
         batch_fp: str | None = None,
@@ -178,8 +203,9 @@ class StateStore:
             "version": version,
             "base": base,
             "segments": segments,
-            # layout key: set by bootstrap, carried by every later commit
-            "sha_pfx_len": SHA_PREFIX_LEN if bootstrap else prev["sha_pfx_len"],
+            # layout key of ``base``: set by each base write, carried by
+            # segment commits
+            "sha_pfx_len": sha_pfx_len,
         }
         if not bootstrap:
             # carry the stream lineage (high-water mark, query id,
@@ -252,17 +278,19 @@ class StateStore:
         prev = self.manifest()
         gen = (int(prev["base"].split("-g")[1]) + 1) if prev else 1
         base = f"base-g{gen:08d}"
-        self._write_base(state, base, SHA_PREFIX_LEN)
-        m = self._commit_manifest(base, [], bootstrap=True)
+        pfx_len = self._write_base(state, base)
+        m = self._commit_manifest(base, [], pfx_len, bootstrap=True)
         m["bytes_written"] = self._du(f"{self.root}/{base}")
         return m
 
-    def _write_base(self, state: DedupState, base: str, pfx_len: int) -> None:
+    def _write_base(self, state: DedupState, base: str) -> int:
+        """Write ``state`` as base ``base``; returns its prefix length."""
+        sha = state.sha_index.select("text_sha", "canonical_url")
+        pfx_len = sha_prefix_len(sha.count())
         # one output file per prefix dir: repartition on the key so each
         # task owns whole partitions (no small-file fan-out)
         sha = (
-            state.sha_index.select("text_sha", "canonical_url")
-            .withColumn("sha_pfx", F.substring("text_sha", 1, pfx_len))
+            sha.withColumn("sha_pfx", F.substring("text_sha", 1, pfx_len))
             .repartition("sha_pfx")
         )
         sha.write.partitionBy("sha_pfx").mode("overwrite").parquet(
@@ -271,6 +299,7 @@ class StateStore:
         state.canonicals.select(*_CANON_COLS).write.mode("overwrite").parquet(
             f"{self.root}/{base}/canonicals"
         )
+        return pfx_len
 
     def _write_segment(self, delta: StateDelta, seg: str) -> None:
         """Data half of a commit — everything here is O(batch).  Split
@@ -317,6 +346,7 @@ class StateStore:
         m = self._commit_manifest(
             prev["base"],
             prev["segments"] + [seg],
+            prev["sha_pfx_len"],
             batch_id=batch_id,
             stream_id=stream_id,
             batch_fp=batch_fp,
@@ -326,15 +356,16 @@ class StateStore:
 
     def compact(self) -> dict:
         """Fold committed segments into a fresh base (one O(corpus)
-        write, amortized over the batches since the last compaction),
-        commit a segments=[] manifest, then GC the old dirs.  A
-        kill at any point leaves the previous manifest readable."""
+        write, amortized over the batches since the last compaction,
+        at the prefix length of the folded index), commit a
+        segments=[] manifest, then GC the old dirs.  A kill at any
+        point leaves the previous manifest readable."""
         prev = self._committed()
         state = self.read()
         gen = int(prev["base"].split("-g")[1]) + 1
         base = f"base-g{gen:08d}"
-        self._write_base(state, base, prev["sha_pfx_len"])
-        m = self._commit_manifest(base, [])
+        pfx_len = self._write_base(state, base)
+        m = self._commit_manifest(base, [], pfx_len)
         m["bytes_written"] = self._du(f"{self.root}/{base}")
         m["gc_removed"] = self.gc()
         return m
@@ -372,25 +403,25 @@ class StateStore:
         ``canon_new`` rows enter the union before the delta join."""
         m = self._committed()
         pfx_len = m["sha_pfx_len"]
-        # explicit schema pins the partition column to string —
+
+        def scan(schema: str, path: str):
+            return self.spark.read.schema(schema).parquet(f"{self.root}/{path}")
+
+        # the schema also pins the partition column to string —
         # inference would coerce digits-only prefixes like "07" to int
-        sha = self.spark.read.schema(
-            "text_sha string, canonical_url string, sha_pfx string"
-        ).parquet(f"{self.root}/{m['base']}/sha_index")
-        canon = self.spark.read.parquet(f"{self.root}/{m['base']}/canonicals")
+        sha = scan(f"{_SHA_SCHEMA}, sha_pfx string", f"{m['base']}/sha_index")
+        canon = scan(_CANON_SCHEMA, f"{m['base']}/canonicals")
         deltas = []
         for seg in m["segments"]:
             # segments are O(batch) — derive the prefix instead of paying
             # a partitioned write per commit; pruning applies to the
             # corpus-sized base, a plain filter to segments
-            seg_sha = self.spark.read.parquet(
-                f"{self.root}/{seg}/sha_new"
-            ).withColumn("sha_pfx", F.substring("text_sha", 1, pfx_len))
-            sha = sha.unionByName(seg_sha)
-            canon = canon.unionByName(
-                self.spark.read.parquet(f"{self.root}/{seg}/canon_new")
+            seg_sha = scan(_SHA_SCHEMA, f"{seg}/sha_new").withColumn(
+                "sha_pfx", F.substring("text_sha", 1, pfx_len)
             )
-            deltas.append(self.spark.read.parquet(f"{self.root}/{seg}/freq_delta"))
+            sha = sha.unionByName(seg_sha)
+            canon = canon.unionByName(scan(_CANON_SCHEMA, f"{seg}/canon_new"))
+            deltas.append(scan(_FREQ_DELTA_SCHEMA, f"{seg}/freq_delta"))
         if deltas:
             agg = deltas[0]
             for d in deltas[1:]:
@@ -442,11 +473,12 @@ def iceberg_commit_sql(
 
     - ``ddl``: one-time table creation.  ``sha_index`` is bucketed on
       ``text_sha`` — the Iceberg equivalent of the parquet layer's
-      sha-prefix partitioning (:data:`SHA_PREFIX_LEN`): the per-batch exact
-      probe prunes its scan to the buckets the batch's keys hash into
-      (storage-partitioned join keeps the index side shuffle-free too).
-      ``sha_buckets`` plays pfx-space P in the 1 − e^(−B/P) read math
-      (SCALE.md) — 65536 ≈ pfx_len 4.
+      sha-prefix partitioning (:func:`sha_prefix_len`): the per-batch
+      exact probe prunes its scan to the buckets the batch's keys hash
+      into (storage-partitioned join keeps the index side shuffle-free
+      too).  ``sha_buckets`` plays pfx-space P in the 1 − e^(−B/P) read
+      math (SCALE.md) — 65536 ≈ pfx_len 4.  The column types are the
+      ones :meth:`StateStore.read` scans the parquet tables with.
     - ``commit``: ONE transaction per batch, replacing a manifest
       rename: append sha_new, fold freq_delta into canonicals, append
       canon_new.  All three inputs are the O(batch) delta views the
@@ -464,14 +496,13 @@ def iceberg_commit_sql(
     sha, canon = f"{table_prefix}.sha_index", f"{table_prefix}.canonicals"
     ddl = [
         f"CREATE TABLE IF NOT EXISTS {sha} (\n"
-        "  text_sha string, canonical_url string)\n"
+        f"  {_SHA_SCHEMA})\n"
         "USING iceberg\n"
         f"PARTITIONED BY (bucket({sha_buckets}, text_sha))\n"
         "TBLPROPERTIES ('write.distribution-mode' = 'hash',\n"
         "               'read.split.target-size' = '134217728')",
         f"CREATE TABLE IF NOT EXISTS {canon} (\n"
-        "  url string, freq bigint, simhash bigint,\n"
-        "  mh_bands array<bigint>, mh_sig array<bigint>)\n"
+        f"  {_CANON_SCHEMA})\n"
         "USING iceberg\n"
         "TBLPROPERTIES ('write.distribution-mode' = 'hash')",
     ]
